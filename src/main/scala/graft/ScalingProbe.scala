@@ -680,14 +680,16 @@ object ScalingProbe {
     }
     sb.append("\nBytes match the library exactly at every size (same files, same\n")
     sb.append("pruning; the narrow read stays file-pruned THROUGH the doorway).\n")
-    sb.append("Wall times are min-of-2: since round 13 the SECOND read of an\n")
-    sb.append("unchanged snapshot serves from the snapshot-keyed served-plan\n")
-    sb.append("cache (GraftV2Table.servedCache), so the recorded number is the\n")
-    sb.append("STEADY-STATE cost a dashboard/multi-statement session sees —\n")
-    sb.append("measured at/below the library scan itself. The FIRST read of a\n")
-    sb.append("snapshot still pays the one-time ~0.3 s planning constant (one\n")
-    sb.append("Catalyst pass + catalog loads), flat across 16x data — never a\n")
-    sb.append("data-path multiplier. Delete-free reads additionally serve the\n")
+    sb.append("Wall times are min-of-2: the SECOND read of an unchanged\n")
+    sb.append("snapshot serves from the snapshot scan state (GraftScanState:\n")
+    sb.append("one planned scan per snapshot and projection, pruned per\n")
+    sb.append("statement), so the recorded number is the STEADY-STATE cost a\n")
+    sb.append("dashboard/multi-statement session sees — measured at/below the\n")
+    sb.append("library scan itself. The FIRST read of a snapshot pays the\n")
+    sb.append("one-time state build (catalog loads, delete-set read, one\n")
+    sb.append("planned scan over every file) — a planning constant that grows\n")
+    sb.append("with the file count, never with the rows a statement reads.\n")
+    sb.append("Delete-free reads additionally serve the\n")
     sb.append("scans' own ColumnarBatches (the vectorized handoff) over a bare\n")
     sb.append("join-free plan — no hidden-column fabrication, no seq broadcast.\n")
 

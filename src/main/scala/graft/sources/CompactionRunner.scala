@@ -652,7 +652,8 @@ object CompactionRunner {
         }
       }
       hit.getOrElse {
-        val df = spark.read.schema(groups.head._1).parquet(paths: _*)
+        val df = org.apache.spark.sql.graftbridge.DatasetBridge.parquetFiles(
+          spark, groups.head._1, paths)
         relationCache.synchronized {
           relationCache.put(key,
             (new java.lang.ref.WeakReference(spark),
@@ -708,8 +709,10 @@ object CompactionRunner {
       canonical: org.apache.spark.sql.types.StructType): (DataFrame, Array[Column]) = {
     // explicit schema (the group's OWN, cache-served) — skips per-plan
     // schema inference; ids in it resolve by name against these same
-    // files, so the read is identical to the inferred one
-    val reader = spark.read.schema(fileSchema).parquet(group.map(_.path): _*)
+    // files, so the read is identical to the inferred one. The relation
+    // is built over the tasks' own paths — no listing job
+    val reader = org.apache.spark.sql.graftbridge.DatasetBridge.parquetFiles(
+      spark, fileSchema, group.map(_.path))
     val taskPaths = group.flatMap(t => canonKeys(t.path)).toSet
     val unmatched = reader.inputFiles.map(canonDecoded).filterNot(taskPaths)
     require(unmatched.isEmpty,

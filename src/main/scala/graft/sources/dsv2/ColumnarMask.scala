@@ -34,10 +34,12 @@ import scala.collection.immutable.ArraySeq
   *    (compacted and freshly-written files stay zero-copy).
   *  - FILTERED reads prune their file list through the same
   *    stats/partition/bloom skipping the row path's pruned-scan routing
-  *    uses ([[GraftCatalog.rangeKeepPaths]]/[[GraftCatalog.inKeepPaths]]),
-  *    then push the filters into the parquet scan; the engine re-applies
-  *    them above the scan (the doorway always reports filters residual),
-  *    so masking a point lookup opens only the covering files.
+  *    uses ([[GraftCatalog.rangeKeepPaths]]/[[GraftCatalog.inKeepPaths]],
+  *    via [[prunedKeep]]) and are served the survivors' splits of the
+  *    snapshot's one masked scan ([[GraftScanState]]); the engine
+  *    re-applies the filters above the scan (the doorway always reports
+  *    filters residual), so masking a point lookup opens only the
+  *    covering files.
   *
   * Strictly opt-in when PROVABLE, else `None` and the row path serves:
   *  - driver-bounded delete sets (manifest record counts, ≤ [[MaxDeleteRows]]);
@@ -72,7 +74,7 @@ object GraftColumnarMask {
 
   /** Probe hook ONLY ([[graft.ScalingProbe]]): forces the row-path
     * fallback so the masked and row dispositions of the same read can be
-    * measured against each other. Part of the served-plan cache key, so
+    * measured against each other. Part of the scan-state cache key, so
     * flipping it can never serve a cached masked plan to a row-path run.
     */
   @volatile private[graft] var disableForProbes = false
@@ -188,15 +190,15 @@ object GraftColumnarMask {
   /** Static file pruning from the pushed filters — the same
     * partition/stats/bloom skipping the row path's pruned-scan routing
     * performs, as a keep-path set computed against the SAME entry list
-    * the mask scans (never a fresh head load — a commit racing the
-    * planning would otherwise exclude files this read still holds).
+    * the scan state planned (never a fresh head load — a commit racing
+    * the planning would otherwise exclude files this read still holds).
     * None = no parseable conjunct arrived (full file set, always
     * correct). Conjuncts that don't parse prune nothing; strict bounds
     * widen to inclusive (the engine re-applies the exact filters above
     * the scan). Numeric-conjunct parsing is [[FilterBounds]]'s — one
     * implementation for the mask and the row path.
     */
-  private def prunedKeep(
+  private[dsv2] def prunedKeep(
       spark: SparkSession,
       cat: GraftCatalog,
       table: String,
@@ -221,49 +223,30 @@ object GraftColumnarMask {
     keep
   }
 
-  private[dsv2] def serve(
+  /** The snapshot's WHOLE delete-masked scan: one raw columnar scan per
+    * footer-schema group over EVERY data file of `entries` (no filter
+    * pushed), its batches masked against the decoded delete set, which is
+    * broadcast once. The caller ([[GraftScanState]]) keeps the result for
+    * the snapshot and serves each statement the stats-pruned survivors'
+    * file splits of these rdds — the delete set is read once per
+    * snapshot, not once per statement. None when masking is not provable
+    * (see the object doc) and the row path must serve.
+    */
+  private[dsv2] def plan(
       spark: SparkSession,
-      root: String,
-      table: String,
-      asOf: Option[Long],
-      required: StructType,
-      filters: Array[Filter],
-      runtimeKeep: Option[Set[String]]): Option[Seq[RDD[ColumnarBatch]]] = {
+      entries: Seq[GraftCatalog#TableEntry],
+      canonical: Option[StructType],
+      required: StructType): Option[Seq[RDD[ColumnarBatch]]] = {
     if (disableForProbes) return None
     if (required.isEmpty) return None // COUNT(*) zero-column reads: row path
     if (!required.fields.forall(f => maskable(f.dataType))) return None
-    val cat = new GraftCatalog(root)
-    // pin the snapshot ONCE: every keep-set consultation below and the
-    // scanned file list come from the same entry list, so a commit
-    // racing the planning can never drop files from the masked result
-    val entries = asOf match {
-      case Some(sid) =>
-        if (!cat.snapshotIds(table).contains(sid)) return None
-        cat.loadEntriesAt(table, sid)
-      case None => cat.loadEntries(table)
-    }
     val pos = entries.filter(_.kind == "posdel")
     val eqEntries = entries.filter(_.kind == "eqdel")
     if (pos.isEmpty && eqEntries.isEmpty) return None // delete-free: plain columnar path
     val delCounts = (pos ++ eqEntries).map(_.recordCount)
     if (!delCounts.forall(_ >= 0L) || delCounts.sum > MaxDeleteRows) return None
 
-    val canonical = asOf match {
-      case Some(sid) => cat.schemaAt(table, sid)
-      case None => cat.currentSchema(table)
-    }
-
-    // head reads prune through the full spec/stats/bloom machinery
-    // (against THIS read's entry list); pinned reads prune on the
-    // snapshot's OWN per-file stats bounds (snapshot-exact; spec and
-    // bloom metadata are head state)
-    val filterKeep: Option[Set[String]] = asOf match {
-      case None => prunedKeep(spark, cat, table, filters, entries)
-      case Some(_) => PinnedPrune.keep(filters, entries)
-    }
-    val data = entries.filter(e => e.kind == "data" &&
-      runtimeKeep.forall(_.contains(e.path)) &&
-      filterKeep.forall(_.contains(e.path)))
+    val data = entries.filter(_.kind == "data")
     if (data.isEmpty || !data.forall(_.format == "parquet")) return None
 
     // resolve every eq-delete entry's key columns to current-schema names
@@ -272,7 +255,7 @@ object GraftColumnarMask {
     // and collect the bounded key sets driver-side
     val eqSets: Option[Seq[EqSet]] =
       if (eqEntries.isEmpty) Some(Nil)
-      else collectEqSets(spark, cat, eqEntries, canonical)
+      else collectEqSets(spark, eqEntries, canonical)
     if (eqSets.isEmpty) return None
     val eqKeyNames: Seq[String] = eqSets.get.flatMap(_.cols).distinct
 
@@ -340,7 +323,8 @@ object GraftColumnarMask {
 
     // one bare pinned-schema scan per footer-schema group; every group
     // must carry the scanned columns verbatim — and under the canonical
-    // id binding — or the whole read refuses
+    // id binding — or the whole read refuses. The relations are built over
+    // the entries' own paths (no listing job)
     val groups = CompactionRunner.schemaGroups(spark, data.map(_.path))
     val plans: Seq[Option[DataFrame]] = groups.map { case (fileSchema, paths) =>
       val ok = scanFields.forall(rf =>
@@ -348,17 +332,9 @@ object GraftColumnarMask {
           ff.name == rf.name && ff.dataType == rf.dataType) &&
           bindingOk(fileSchema, canonical, rf.name))
       if (!ok) None
-      else try {
-        val base = spark.read.schema(fileSchema).parquet(paths: _*)
-        val filtered = filters.flatMap(V1FilterColumns.toColumn)
-          .foldLeft(base)(_.filter(_)) // pushdown only; peeled below, Spark re-checks
-        Some(filtered.select(
-          scanFields.map(f => col(f.name)).toIndexedSeq :+ col("_metadata"): _*))
-      } catch {
-        // e.g. a pushed filter names a column this generation's files
-        // lack — the row path's evolution machinery handles it
-        case _: org.apache.spark.sql.AnalysisException => None
-      }
+      else Some(org.apache.spark.sql.graftbridge.DatasetBridge
+        .parquetFiles(spark, fileSchema, paths)
+        .select(scanFields.map(f => col(f.name)).toIndexedSeq :+ col("_metadata"): _*))
     }
     if (!plans.forall(_.isDefined)) return None
     val bridge = org.apache.spark.sql.graftbridge.DatasetBridge
@@ -366,7 +342,7 @@ object GraftColumnarMask {
     // (selecting `_metadata` plans a struct-building Project over a scan
     // whose output already carries file_path / row_index — the raw leaf
     // is exactly what masking needs, located by name per group)
-    val colRdds = plans.flatten.map(df => bridge.columnarScanRaw(df, peelFilters = true))
+    val colRdds = plans.flatten.map(df => bridge.columnarScanRaw(df))
     if (!colRdds.forall(_.isDefined)) return None
     val located: Seq[Option[Located]] = colRdds.flatten.map { case (_, names) =>
       val dataIdx = required.fields.map(f => names.indexOf(f.name))
@@ -421,11 +397,6 @@ object GraftColumnarMask {
       data.map(e => CompactionRunner.canonKey(e.path) -> e.seqNum).toMap
     val eqMaxSeq: Long = eqProbe.map(_.maxSeq).foldLeft(Long.MinValue)(math.max)
     val bc = spark.sparkContext.broadcast((byFile, eqProbe, seqByFile))
-    // both diagnostic counters increment HERE, at the moment serving is
-    // decided — a caller-side increment would silently desync the gates'
-    // counter requires if a second call site ever appeared
-    maskedServed.incrementAndGet()
-    if (eqEntries.nonEmpty) maskedEqServed.incrementAndGet()
 
     Some(colRdds.flatten.zip(located.flatten).map { case ((rdd, _), loc) =>
       val requiredLocal = required
@@ -483,7 +454,6 @@ object GraftColumnarMask {
     */
   private def collectEqSets(
       spark: SparkSession,
-      cat: GraftCatalog,
       eqEntries: Seq[GraftCatalog#TableEntry],
       canonical: Option[StructType]): Option[Seq[EqSet]] = {
     val bySig = eqEntries.groupBy(e => (e.eqCols, e.eqIds)).toSeq

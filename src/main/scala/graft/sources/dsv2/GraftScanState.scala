@@ -1,0 +1,217 @@
+package graft.sources.dsv2
+
+import org.apache.spark.Partition
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.{CompactionRunner, GraftCatalog}
+
+/** SNAPSHOT-SCOPED SCAN STATE: everything a doorway batch read of one
+  * snapshot needs that does not depend on the statement's filters, built
+  * once per (session, table generation, snapshot, pinned-or-head,
+  * projection) and reused by every statement that reads it.
+  *
+  *  - the snapshot's entry list — ONE list, read at the snapshot the
+  *    state is keyed by, so pruning, planning and serving can never mix
+  *    snapshots (a commit landing between key and load cannot cache newer
+  *    files under an older id);
+  *  - ONE planned scan over ALL data files, built with no filter pushed:
+  *    the delete-masked columnar scan ([[GraftColumnarMask.plan]] — the
+  *    delete set decoded and broadcast once), else the delete-free
+  *    columnar or narrow row plan of [[GraftInnerFrame.frames]]. Each is
+  *    kept as the plan's rdds plus their planned `FilePartition`s.
+  *
+  * A statement then prunes files by stats/partition/bloom against the
+  * cached entries and serves only the survivors' splits as FOREIGN splits
+  * of the cached rdds — the regroup one-plan keyed serving does
+  * ([[GraftKeyedServing]]), legal because
+  * [[DatasetBridge.fileScanPartitions]] proves each chain passes the split
+  * through. A fresh-literal point read therefore runs no Spark job at
+  * planning (the reference applies one snapshot's delete set to its file
+  * tasks the same way, `iceberg_file_task_scan.rs:224-314`). The doorway
+  * reports every pushed filter residual, so serving unfiltered rows of the
+  * surviving files is exact.
+  *
+  * A plan that cannot be sliced by file (a shuffle-bearing row path) keeps
+  * its per-filter served groups inside the state instead, under the same
+  * LRU rule as the states themselves. Runtime-filtered (DPP) reads prune
+  * the sliced plan per statement like any other and never store or hit a
+  * filter-keyed entry: their file set is query-local.
+  */
+private[dsv2] final class GraftScanState private (
+    val snapshotId: Long,
+    entries: Seq[GraftCatalog#TableEntry],
+    sliced: Option[Seq[GraftSlices]],
+    maskedEq: Option[Boolean]) {
+
+  private val unsliced = GraftScanState.lru[Seq[String], Seq[GraftServedGroup]]()
+
+  private def serve(
+      spark: SparkSession,
+      cat: GraftCatalog,
+      root: String,
+      table: String,
+      pinned: Boolean,
+      required: StructType,
+      filters: Array[Filter],
+      runtimeKeep: Option[Set[String]]): Seq[GraftServedGroup] =
+    sliced match {
+      case Some(groups) =>
+        maskedEq.foreach { eq =>
+          GraftColumnarMask.maskedServed.incrementAndGet()
+          if (eq) GraftColumnarMask.maskedEqServed.incrementAndGet()
+        }
+        // head reads prune through the full spec/stats/bloom machinery,
+        // pinned reads on the snapshot's OWN per-file stats bounds (spec
+        // and bloom metadata are head state) — both against THIS state's
+        // entries, never a fresh load
+        val statKeep: Option[Set[String]] =
+          if (pinned) PinnedPrune.keep(filters, entries)
+          else GraftColumnarMask.prunedKeep(spark, cat, table, filters, entries)
+        // keep sets arrive in the raw entry-path domain; the planned splits
+        // render Hadoop-encoded — both meet in the canonical literal domain
+        Seq(statKeep, runtimeKeep).flatten
+          .map(_.map(CompactionRunner.canonKey))
+          .reduceOption(_ intersect _) match {
+          case None => groups
+          case Some(keep) =>
+            groups.map(g => g.withParts(GraftScanState.prune(spark, g.parts, keep)))
+        }
+      case None =>
+        def build(): Seq[GraftServedGroup] =
+          GraftInnerFrame.served(spark, root, table, Some(snapshotId), required,
+            filters, None, runtimeKeep)
+        if (runtimeKeep.isDefined) build()
+        else {
+          val key = filters.toSeq.map(_.toString)
+          unsliced.synchronized(Option(unsliced.get(key))).getOrElse {
+            val served = build()
+            unsliced.synchronized(unsliced.put(key, served))
+            served
+          }
+        }
+    }
+}
+
+private[dsv2] object GraftScanState {
+
+  /** States (and each state's filter-keyed entries) kept, most recently
+    * used first. The states hold LAZY rdds and one broadcast each —
+    * caching them re-serves plans, never data.
+    */
+  private val MaxEntries = 64
+
+  private def lru[K, V]() =
+    new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size() > MaxEntries
+    }
+
+  /** Every dimension a served plan depends on. The session's UUID (never
+    * reused, unlike an identity hash) keeps rdds of a stopped session's
+    * context out of a new one; the table's creation UUID separates a
+    * dropped-and-recreated table, whose snapshot ids restart at 1; pinned
+    * and head reads of one snapshot prune differently; the projection
+    * shapes the planned scan; the probe switch decides masked vs row.
+    */
+  private final case class Key(
+      session: String,
+      root: String,
+      table: String,
+      tableUuid: String,
+      pinned: Boolean,
+      snapshotId: Long,
+      projection: String,
+      masksDisabled: Boolean)
+
+  private val states = lru[Key, GraftScanState]()
+
+  /** The doorway's unkeyed batch read: the served groups of `table` at
+    * `asOf` (head when None) for one statement's `filters` and runtime
+    * keep set, from the snapshot's cached state — built on first use.
+    */
+  def serve(
+      spark: SparkSession,
+      root: String,
+      table: String,
+      asOf: Option[Long],
+      required: StructType,
+      filters: Array[Filter],
+      runtimeKeep: Option[Set[String]]): Seq[GraftServedGroup] = {
+    val cat = new GraftCatalog(root)
+    val sid = asOf.getOrElse(cat.currentSnapshotId(table))
+    val key = Key(DatasetBridge.sessionUUID(spark), root, table,
+      cat.tableUuid(table).getOrElse(""), asOf.isDefined, sid,
+      required.catalogString, GraftColumnarMask.disableForProbes)
+    val state = states.synchronized(Option(states.get(key))).getOrElse {
+      val built = build(spark, root, table, cat, sid, required)
+      states.synchronized(states.put(key, built))
+      built
+    }
+    state.serve(spark, cat, root, table, asOf.isDefined, required, filters, runtimeKeep)
+  }
+
+  private def build(
+      spark: SparkSession,
+      root: String,
+      table: String,
+      cat: GraftCatalog,
+      sid: Long,
+      required: StructType): GraftScanState = {
+    val entries = cat.loadEntriesAt(table, sid)
+    def slices[R](plans: Seq[Option[(R, Seq[FilePartition])]],
+        mk: (R, Seq[Partition]) => GraftSlices): Option[Seq[GraftSlices]] =
+      if (plans.nonEmpty && plans.forall(_.isDefined))
+        Some(plans.flatten.map { case (rdd, parts) => mk(rdd, parts) })
+      else None
+    val masked: Option[Seq[GraftSlices]] =
+      if (required.fieldNames.exists(n => n == "_file" || n == "_pos")) None
+      else GraftColumnarMask.plan(spark, entries, cat.schemaAt(table, sid), required)
+        .flatMap(rdds => slices(
+          rdds.map(r => DatasetBridge.fileScanPartitions(r).map(r -> _)),
+          GraftColumnarSlices(null, _, _)))
+    masked match {
+      case Some(groups) =>
+        new GraftScanState(sid, entries, Some(groups),
+          Some(entries.exists(_.kind == "eqdel")))
+      case None =>
+        // statsPrune = false: with no filters there is nothing to prune,
+        // and the plan must cover every file of the snapshot
+        val fs = GraftInnerFrame.frames(spark, root, table, Some(sid), required,
+          Array.empty, statsPrune = false)
+        val plan = slices(fs.map(DatasetBridge.columnarFileScan(_, peelFilters = true)),
+            GraftColumnarSlices(null, _, _))
+          .orElse(slices(fs.map(DatasetBridge.rowFileScan), GraftRowSlices(null, _, _)))
+        new GraftScanState(sid, entries, plan, None)
+    }
+  }
+
+  /** The planned splits of the files in `keep` (canonical keys), packed
+    * the way Spark packs a scan of just those files: descending size into
+    * partitions of at most `min(maxPartitionBytes, max(openCost,
+    * bytes / parallelism))`. Every file kept serves the planned partitions
+    * unchanged; none kept serves one empty partition (an empty
+    * `FilePartition` computes an empty iterator).
+    */
+  private def prune(
+      spark: SparkSession,
+      parts: Seq[Partition],
+      keep: Set[String]): Seq[Partition] = {
+    val files = parts.flatMap { case fp: FilePartition => fp.files.toSeq }
+    val kept = files.filter(pf =>
+      keep.contains(CompactionRunner.canonDecoded(pf.filePath.toString)))
+    if (kept.size == files.size) parts
+    else if (kept.isEmpty) Seq(FilePartition(0, Array.empty))
+    else {
+      val conf = spark.sessionState.conf
+      val openCost = conf.filesOpenCostInBytes
+      val bytes = kept.map(_.length + openCost).sum
+      val maxSplit = math.min(conf.filesMaxPartitionBytes,
+        math.max(openCost, bytes / math.max(1, spark.sparkContext.defaultParallelism)))
+      FilePartition.getFilePartitions(spark, kept.sortBy(-_.length), maxSplit)
+    }
+  }
+}

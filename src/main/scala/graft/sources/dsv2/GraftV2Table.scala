@@ -1196,85 +1196,21 @@ class GraftV1Scan(
         }, token = () => "keyed")
       case None =>
         new GraftRddBatch(() => {
-          // SERVED-PLAN CACHE: repeat reads of an UNCHANGED snapshot with
-          // the same projection/filters reuse the previously planned
-          // groups — the doorway's per-statement planning constant (one
-          // Catalyst pass + catalog loads, ~0.3 s) drops to a head-file
-          // read on every re-read, the shape a dashboard or a
-          // multi-statement session actually has. Keyed by snapshot id,
-          // so any commit naturally misses; runtime-filtered and
-          // group-filtered reads are never cached (their file sets are
-          // query-local).
-          // asOf.isDefined is part of the key: a commit racing a HEAD
-          // read's planning can cache the newer snapshot's groups under
-          // the pre-commit id — harmless for head reads (any later read
-          // keys the new head) but a VERSION AS OF <old> must never hit
-          // that entry, so pinned and head reads never share keys.
-          // The table's creation UUID is part of the key too: snapshot
-          // ids restart at 1 on DROP + CREATE of the same name, so
-          // without it a repeat SELECT after a re-create would hit the
-          // dropped generation's planned groups and silently serve its
-          // rows. sessionUUID (not identityHashCode) keys the session: a
-          // stopped-and-GC'd session's identity hash can be reused by a
-          // new one, whose hit would serve RDDs bound to a dead context.
+          val spark = SparkSession.active
           // a HEAD read that CLAIMED ordering pins its planning to the
           // claim's snapshot (see orderingClaimSnapshot) — the commit
           // window between optimizer-time claim and execution-time plan
           // must never serve newer data under the sorted claim
           val serveAsOf = asOf.orElse(orderingClaimSnapshot)
-          val cacheKey: Option[Any] =
-            if (host.nonEmpty || runtimeKeep.nonEmpty) None
-            else scala.util.Try({
-              val c = new GraftCatalog(root)
-              val sessionKey = org.apache.spark.sql.graftbridge.DatasetBridge
-                .sessionUUID(SparkSession.active)
-              (sessionKey,
-                root, table, c.tableUuid(table).getOrElse(""),
-                serveAsOf.isDefined,
-                serveAsOf.getOrElse(c.currentSnapshotId(table)),
-                required.catalogString, filters.toSeq.map(_.toString),
-                GraftColumnarMask.disableForProbes)
-            }).toOption
-          cacheKey.flatMap(GraftV2Table.servedCacheGet).getOrElse {
-          val served: Seq[GraftServedGroup] = {
-          // VECTORIZED pos-delete masking: when the pending deletes are
-          // position-only and driver-bounded, serve the scans' own
-          // ColumnarBatches with deleted positions masked per batch —
-          // no anti join, ColumnarToRow stays at the consumer. Refuses
-          // (None) back to the row path on anything unprovable.
-          val masked: Option[Seq[GraftServedGroup]] =
-            if (host.nonEmpty ||
-                required.fieldNames.exists(n => n == "_file" || n == "_pos")) None
-            else GraftColumnarMask.serve(SparkSession.active, root, table,
-                serveAsOf, required, filters, runtimeKeep)
-              .map(_.map(GraftColumnarGroup(_): GraftServedGroup))
-          masked.getOrElse {
-          val fs = GraftInnerFrame.frames(
-            SparkSession.active, root, table, serveAsOf, required, filters,
-            host.flatMap(_.groupFilter), keepPaths = runtimeKeep)
-          // VECTORIZED HANDOFF: when every group's plan is a bare
-          // columnar scan (no residual filter/cast/join — the plain
-          // no-delete read), serve the scans' own ColumnarBatch rdds and
-          // let the CONSUMING query do the one row conversion — one
-          // row-materialization layer instead of two. All-or-nothing:
-          // BatchScanExec forbids mixing row and columnar partitions.
-          val columnar =
-            if (fs.isEmpty) None
-            else {
-              val cols = fs.map(f => org.apache.spark.sql.graftbridge
-                .DatasetBridge.columnarRddNoAqe(f, peelFilters = true))
-              if (cols.forall(_.isDefined)) Some(cols.flatten) else None
-            }
-          columnar match {
-            case Some(crdds) => crdds.map(GraftColumnarGroup(_): GraftServedGroup)
-            case None => GraftInnerFrame.servableRdds(fs)
-              .map(GraftRowGroup(null, _): GraftServedGroup)
-          }
-          }
-          }
-          cacheKey.foreach(GraftV2Table.servedCachePut(_, served))
-          served
-          }
+          // a copy-on-write group filter restricts the read to a
+          // query-local file set through the row-id scan: planned per
+          // statement. Every other read serves from the snapshot's scan
+          // state — planned once per snapshot, pruned per statement.
+          if (host.nonEmpty)
+            GraftInnerFrame.served(spark, root, table, serveAsOf, required,
+              filters, host.flatMap(_.groupFilter), runtimeKeep)
+          else GraftScanState.serve(
+            spark, root, table, serveAsOf, required, filters, runtimeKeep)
         }, token = () => (runtimeKeep, host.flatMap(_.groupFilter)))
     }
 
@@ -1345,13 +1281,15 @@ final class GraftRddBatch(
         rdd.partitions.map(p =>
           new GraftKeyedColumnarRddInputPartition(rdd, p, key)
             : org.apache.spark.sql.connector.read.InputPartition)
-      case GraftKeyedSlices(key, rdd, parts) =>
+      case GraftRowSlices(key, rdd, parts) =>
         parts.map(p =>
-          new GraftKeyedRddInputPartition(rdd, p, key)
+          (if (key == null) GraftRddInputPartition(rdd, p)
+           else new GraftKeyedRddInputPartition(rdd, p, key))
             : org.apache.spark.sql.connector.read.InputPartition)
-      case GraftKeyedColumnarSlices(key, rdd, parts) =>
+      case GraftColumnarSlices(key, rdd, parts) =>
         parts.map(p =>
-          new GraftKeyedColumnarRddInputPartition(rdd, p, key)
+          (if (key == null) GraftColumnarRddInputPartition(rdd, p)
+           else new GraftKeyedColumnarRddInputPartition(rdd, p, key))
             : org.apache.spark.sql.connector.read.InputPartition)
     }.toArray
 
@@ -1376,20 +1314,33 @@ private[dsv2] final case class GraftKeyedColumnarGroup(
     rdd: RDD[org.apache.spark.sql.vectorized.ColumnarBatch])
     extends GraftServedGroup
 
-/** One tuple's SLICE of a single shared plan — the one-plan keyed serving
-  * shape: `parts` are tuple-pure `FilePartition`s regrouped from the ONE
-  * planned scan's file set, served as foreign splits of that scan's rdd.
+/** A SLICE of a single shared plan: `parts` are `FilePartition`s
+  * regrouped from the ONE planned scan's file set, served as foreign
+  * splits of that scan's rdd ([[org.apache.spark.sql.graftbridge.DatasetBridge.fileScanPartitions]]
+  * proves the chain passes the split through). Keyed by partition tuple
+  * for one-plan keyed serving; `key == null` for the snapshot scan
+  * state's pruned reads.
   */
-private[dsv2] final case class GraftKeyedSlices(
+private[dsv2] sealed trait GraftSlices extends GraftServedGroup {
+  def parts: Seq[org.apache.spark.Partition]
+  def withParts(ps: Seq[org.apache.spark.Partition]): GraftSlices
+}
+private[dsv2] final case class GraftRowSlices(
     key: org.apache.spark.sql.catalyst.InternalRow,
     rdd: RDD[org.apache.spark.sql.catalyst.InternalRow],
     parts: Seq[org.apache.spark.Partition])
-    extends GraftServedGroup
-private[dsv2] final case class GraftKeyedColumnarSlices(
+    extends GraftSlices {
+  override def withParts(ps: Seq[org.apache.spark.Partition]): GraftSlices =
+    copy(parts = ps)
+}
+private[dsv2] final case class GraftColumnarSlices(
     key: org.apache.spark.sql.catalyst.InternalRow,
     rdd: RDD[org.apache.spark.sql.vectorized.ColumnarBatch],
     parts: Seq[org.apache.spark.Partition])
-    extends GraftServedGroup
+    extends GraftSlices {
+  override def withParts(ps: Seq[org.apache.spark.Partition]): GraftSlices =
+    copy(parts = ps)
+}
 
 /** An input partition serving the scan's own `ColumnarBatch`es — the
   * consuming query's `ColumnarToRow` is then the ONLY row conversion.
@@ -1493,6 +1444,38 @@ private[dsv2] object GraftInnerFrame {
       fileFilter: Option[Set[String]] = None): DataFrame =
     frames(spark, root, table, asOf, required, filters, fileFilter)
       .reduce(_.unionByName(_))
+
+  /** The per-statement serve of a read whose file set is query-local
+    * (a copy-on-write group filter) or whose plan cannot be sliced by file
+    * (a shuffle-bearing row path): the frames planned with the statement's
+    * filters, served as the scans' own columnar batches when every group
+    * plans as a bare columnar scan — the consuming query then does the one
+    * row conversion; BatchScanExec forbids mixing row and columnar
+    * partitions, so it is all-or-nothing — else as servable row rdds.
+    */
+  def served(
+      spark: SparkSession,
+      root: String,
+      table: String,
+      asOf: Option[Long],
+      required: StructType,
+      filters: Array[Filter],
+      fileFilter: Option[Set[String]],
+      keepPaths: Option[Set[String]]): Seq[GraftServedGroup] = {
+    val fs = frames(spark, root, table, asOf, required, filters, fileFilter,
+      keepPaths = keepPaths)
+    val columnar =
+      if (fs.isEmpty) None
+      else {
+        val cols = fs.map(f => org.apache.spark.sql.graftbridge
+          .DatasetBridge.columnarRddNoAqe(f, peelFilters = true))
+        if (cols.forall(_.isDefined)) Some(cols.flatten) else None
+      }
+    columnar match {
+      case Some(crdds) => crdds.map(GraftColumnarGroup(_): GraftServedGroup)
+      case None => servableRdds(fs).map(GraftRowGroup(null, _): GraftServedGroup)
+    }
+  }
 
   /** The MoR read as one frame PER SCHEMA GROUP (single-element for
     * row-identity reads and pruned point lookups): each group plans
@@ -1854,36 +1837,18 @@ object GraftKeyedServing {
     val colPlans = fs.map(f => bridge.columnarFileScan(f, peelFilters = true))
     if (colPlans.forall(_.isDefined))
       serve(colPlans.flatten, (k, rdd: RDD[org.apache.spark.sql.vectorized.ColumnarBatch],
-        ps) => GraftKeyedColumnarSlices(k, rdd, ps))
+        ps) => GraftColumnarSlices(k, rdd, ps))
     else {
       val rowPlans = fs.map(f => bridge.rowFileScan(f))
       if (rowPlans.forall(_.isDefined))
         serve(rowPlans.flatten, (k, rdd: RDD[org.apache.spark.sql.catalyst.InternalRow],
-          ps) => GraftKeyedSlices(k, rdd, ps))
+          ps) => GraftRowSlices(k, rdd, ps))
       else None
     }
   }
 }
 
 private[dsv2] object GraftV2Table {
-
-  /** Cross-statement served-plan cache: (session, root, table, snapshot,
-    * projection, filters) → planned groups. Snapshot id in the key makes
-    * staleness impossible (a commit changes the key); the LRU bound keeps
-    * retained RDD references small. The groups are LAZY rdds — caching
-    * them re-serves the plan, it never re-serves data.
-    */
-  private[dsv2] val servedCache =
-    new java.util.LinkedHashMap[Any, Seq[GraftServedGroup]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, Seq[GraftServedGroup]]): Boolean =
-        size() > 64
-    }
-  private[dsv2] object servedCacheLock
-  private[dsv2] def servedCacheGet(k: Any): Option[Seq[GraftServedGroup]] =
-    servedCacheLock.synchronized(Option(servedCache.get(k)))
-  private[dsv2] def servedCachePut(k: Any, v: Seq[GraftServedGroup]): Unit =
-    servedCacheLock.synchronized { servedCache.put(k, v); () }
 
   /** Transform names resolvable through [[GraftV2Functions]] (plus
     * Spark-native `identity`) — the only ones a clustered write

@@ -165,10 +165,10 @@ object DatasetBridge {
     * whose output already carries the FLAT metadata columns (file_path,
     * row_index); the raw scan batches are exactly what masking needs.
     */
-  def columnarScanRaw(df: DataFrame, peelFilters: Boolean = false)
+  def columnarScanRaw(df: DataFrame)
       : Option[(org.apache.spark.rdd.RDD[org.apache.spark.sql.vectorized.ColumnarBatch],
         Seq[String])] = {
-    import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
     val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
     val conf = ds.sparkSession.sessionState.conf.clone()
     conf.setConf(
@@ -179,7 +179,6 @@ object DatasetBridge {
         case c: ColumnarToRowExec => peel(c.child)
         case i: InputAdapter => peel(i.child)
         case pr: ProjectExec => peel(pr.child)
-        case f: FilterExec if peelFilters => peel(f.child)
         case leaf if leaf.children.isEmpty && leaf.supportsColumnar => Some(leaf)
         case _ => None
       }
@@ -210,6 +209,63 @@ object DatasetBridge {
         case _ => None
       }
     case _ => None
+  }
+
+  /** The planned `FilePartition`s of the chain's leaf file scan when the
+    * chain is foreign-split-safe ([[fileScanLeaf]]) — serving the TOP rdd
+    * with any regrouping of the contained `PartitionedFile`s then reads
+    * exactly the regrouped files.
+    */
+  def fileScanPartitions(r: org.apache.spark.rdd.RDD[_])
+      : Option[Seq[org.apache.spark.sql.execution.datasources.FilePartition]] =
+    fileScanLeaf(r).map(_.filePartitions)
+
+  /** A parquet relation over EXACTLY `paths`, read with `schema`, built
+    * WITHOUT Spark's file listing. `spark.read.schema(s).parquet(paths)`
+    * lists its paths through an `InMemoryFileIndex`, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
+    * that listing is a Spark job (measured 336–1015 ms for 48–128 paths
+    * on a 4-cpu host). Catalog entries already name every file, so the
+    * index here is seeded instead: each file is stat'ed once on the
+    * driver and its `FileStatusCache` answers every root path with that
+    * status. The recorded entry sizes are deliberately NOT trusted: a
+    * split planned from a wrong length silently skips the row groups
+    * outside it (a hand-written manifest recording 1 byte served 0 rows).
+    * The relation is otherwise the one `DataSource` resolves for the same
+    * call — qualified paths (each file's base path is its parent
+    * directory, so no partition columns are inferred), the schema made
+    * nullable, the parquet file format — so `_metadata`, `inputFiles` and
+    * scan planning behave identically.
+    */
+  def parquetFiles(
+      spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      paths: Seq[String]): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+    val conf = spark.sessionState.newHadoopConf()
+    val statuses: Seq[FileStatus] = paths.distinct.map { p =>
+      val raw = new Path(p)
+      val fs = raw.getFileSystem(conf)
+      fs.getFileStatus(raw.makeQualified(fs.getUri, fs.getWorkingDirectory))
+    }
+    val byPath: Map[Path, Array[FileStatus]] =
+      statuses.map(s => s.getPath -> Array(s)).toMap
+    val seeded = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        byPath.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath),
+      Map.empty, Some(schema), seeded)
+    val relation = HadoopFsRelation(index,
+      partitionSchema = new org.apache.spark.sql.types.StructType(),
+      dataSchema = schema.asNullable, bucketSpec = None,
+      fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      options = Map.empty)(spark)
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LogicalRelation(relation))
   }
 
   /** As [[columnarRddNoAqe]], but additionally requiring the scan to be a

@@ -26,6 +26,24 @@ class ColumnarMaskSpec extends SparkSpec {
         b.supportsColumnar
     }.getOrElse(fail("no BatchScanExec:\n" + df.queryExecution.executedPlan))
 
+  /** Data files a masked serve of `t` reads for one pushed filter; None
+    * when the snapshot's state does not serve masked.
+    */
+  private def maskedFiles(
+      root: String,
+      asOf: Option[Long],
+      required: org.apache.spark.sql.types.StructType,
+      filter: org.apache.spark.sql.sources.Filter): Option[Int] = {
+    val masked0 = GraftColumnarMask.maskedServed.get()
+    val groups = GraftScanState.serve(spark, root, "t", asOf, required,
+      Array(filter), None)
+    if (GraftColumnarMask.maskedServed.get() == masked0) None
+    else Some(groups.flatMap(_.asInstanceOf[GraftColumnarSlices].parts).flatMap {
+      case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
+        fp.files.map(_.filePath.toString)
+    }.distinct.size)
+  }
+
   test("masks first/last/middle positions exactly, nulls preserved") {
     val root = Files.createTempDirectory("graft-mask-edge").toString
     val g = mount(root)
@@ -143,18 +161,16 @@ class ColumnarMaskSpec extends SparkSpec {
       Seq((42L, "v42")))
     assert(GraftColumnarMask.maskedServed.get() > masked0,
       "filtered reads must serve through the masked path now")
-    // pruning proof: the mask consults the stats/partition keep set, so a
-    // filter excluding EVERY file leaves no data files and the serve
-    // refuses (None) — if pruning were skipped it would happily plan all
+    // pruning proof: the masked serve consults the stats/partition keep
+    // set, so a filter excluding EVERY file serves no data file — if
+    // pruning were skipped it would serve both
     import org.apache.spark.sql.sources.EqualTo
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val req = StructType(Seq(StructField("k", LongType)))
-    assert(GraftColumnarMask.serve(spark, root, "t", None, req,
-      Array(EqualTo("k", 5000L)), None).isEmpty,
+    assert(maskedFiles(root, None, req, EqualTo("k", 5000L)) == Some(0),
       "a filter with no covering file must prune the mask to nothing")
-    assert(GraftColumnarMask.serve(spark, root, "t", None, req,
-      Array(EqualTo("k", 42L)), None).nonEmpty,
-      "a covered point lookup must serve masked")
+    assert(maskedFiles(root, None, req, EqualTo("k", 42L)) == Some(1),
+      "a covered point lookup must serve masked, its one covering file")
     // range filters prune and mask too
     assert(spark.sql(s"SELECT count(*) FROM $g.t WHERE k >= 500")
       .head().getLong(0) == (500L until 1000L).count(_ % 10 != 3))
@@ -225,11 +241,9 @@ class ColumnarMaskSpec extends SparkSpec {
     val req = StructType(Seq(StructField("k", LongType)))
     // k=5000 exists at HEAD but no pinned file's bounds cover it: the
     // pinned mask prunes to nothing (proof the keep set is snapshot-exact)
-    assert(GraftColumnarMask.serve(spark, root, "t", Some(pinned), req,
-      Array(EqualTo("k", 5000L)), None).isEmpty,
+    assert(maskedFiles(root, Some(pinned), req, EqualTo("k", 5000L)) == Some(0),
       "a pinned lookup outside the snapshot's bounds must prune everything")
-    assert(GraftColumnarMask.serve(spark, root, "t", Some(pinned), req,
-      Array(EqualTo("k", 42L)), None).nonEmpty,
+    assert(maskedFiles(root, Some(pinned), req, EqualTo("k", 42L)) == Some(1),
       "a covered pinned lookup must serve masked")
     // the SQL read stays exact and columnar
     val out = spark.sql(
