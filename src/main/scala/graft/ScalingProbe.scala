@@ -686,9 +686,11 @@ object ScalingProbe {
     sb.append("statement), so the recorded number is the STEADY-STATE cost a\n")
     sb.append("dashboard/multi-statement session sees — measured at/below the\n")
     sb.append("library scan itself. The FIRST read of a snapshot pays the\n")
-    sb.append("one-time state build (catalog loads, delete-set read, one\n")
-    sb.append("planned scan over every file) — a planning constant that grows\n")
-    sb.append("with the file count, never with the rows a statement reads.\n")
+    sb.append("one-time state build, from the previous head state of the\n")
+    sb.append("same table and projection: catalog loads, a decode of only the\n")
+    sb.append("delete files the commit added, and a re-plan of only the\n")
+    sb.append("footer-schema groups whose files changed — a planning constant\n")
+    sb.append("that never grows with the rows a statement reads.\n")
     sb.append("Delete-free reads additionally serve the\n")
     sb.append("scans' own ColumnarBatches (the vectorized handoff) over a bare\n")
     sb.append("join-free plan — no hidden-column fabrication, no seq broadcast.\n")

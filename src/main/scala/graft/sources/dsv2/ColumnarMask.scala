@@ -140,7 +140,7 @@ object GraftColumnarMask {
   }
 
   /** One resolved equality-delete key set: the CURRENT-schema key column
-    * names, and the collected `key tuple → max delete sequence` probe map
+    * names, and the merged `key tuple → max delete sequence` probe map
     * (a row is deleted iff its tuple is present with a max seq strictly
     * greater than the row's file seq — exactly the chained anti joins'
     * semantics, since "matched by any delete newer than the row" is
@@ -150,7 +150,7 @@ object GraftColumnarMask {
     * dominant CDC shape (one long PK): the same probe as sorted parallel
     * arrays, binary-searched per row with ZERO allocation (the generic
     * map probe boxes every key value into an `Array[Any]` + `ArraySeq`
-    * per row). Built in [[serve]] once the scanned types are known; null
+    * per row). Built in [[plan]] once the scanned types are known; null
     * for composite or non-integral keys.
     */
   private final case class EqSet(
@@ -160,6 +160,43 @@ object GraftColumnarMask {
       maxSeq: Long,
       longKeys: Array[Long] = null,
       longSeqs: Array[Long] = null)
+
+  /** One equality-delete file's decoded rows: the CURRENT-schema key
+    * column names its key columns resolved to, and its normalized key
+    * tuples (tuples holding a null are dropped — a null key value matches
+    * nothing under SQL equality).
+    */
+  private final case class EqRows(cols: Seq[String], keys: Array[Seq[Any]])
+
+  /** One footer-schema group's planned raw leaf scan over `paths`: the
+    * scanned fields plus the flat metadata columns, `names` in the leaf's
+    * output order. Lazy — planning it ran no job.
+    */
+  private final case class RawScan(
+      schema: StructType,
+      paths: Seq[String],
+      scanFields: Seq[StructField],
+      rdd: RDD[ColumnarBatch],
+      names: Seq[String])
+
+  /** What one masked plan leaves for the next snapshot's plan of the same
+    * table and projection: every delete file it decoded (position deletes
+    * as data-file canonKey → positions, equality deletes as [[EqRows]]),
+    * keyed by the delete file's canonKey, and its raw scan per
+    * footer-schema group. Files are immutable, so a decoded file and a
+    * group planned over an identical file set stay valid for every
+    * snapshot that lists them — compaction, rollback and expiry need no
+    * special case. The canonical schema they were resolved against must
+    * match, or nothing is reused.
+    */
+  private[dsv2] final class Pieces private[GraftColumnarMask] (
+      private[GraftColumnarMask] val canonical: Option[StructType],
+      private[GraftColumnarMask] val pos: Map[String, Map[String, Array[Long]]],
+      private[GraftColumnarMask] val eq: Map[String, EqRows],
+      private[GraftColumnarMask] val scans: Seq[RawScan])
+
+  /** The predecessor of a plan built from nothing. */
+  private[dsv2] val NoPieces = new Pieces(None, Map.empty, Map.empty, Nil)
 
   /** Per-group column locations inside the raw leaf-scan batches. */
   private final case class Located(
@@ -228,15 +265,29 @@ object GraftColumnarMask {
     * pushed), its batches masked against the decoded delete set, which is
     * broadcast once. The caller ([[GraftScanState]]) keeps the result for
     * the snapshot and serves each statement the stats-pruned survivors'
-    * file splits of these rdds — the delete set is read once per
-    * snapshot, not once per statement. None when masking is not provable
-    * (see the object doc) and the row path must serve.
+    * file splits of these rdds. None when masking is not provable (see
+    * the object doc) and the row path must serve.
+    *
+    * Built from `prev`, the pieces of the previous snapshot's plan
+    * ([[NoPieces]] for a build from nothing — the same function), in three
+    * steps:
+    *  1. decode each delete file `prev` did not decode, keyed by canonical
+    *     path (position parquet files in one job, deletion vectors on the
+    *     driver, equality files in one job per key signature);
+    *  2. plan each footer-schema group whose file set `prev` did not plan
+    *     (so the layout is always exactly what a build from nothing plans);
+    *  3. merge on the driver — per-key max seqs, sorted positions and the
+    *     per-file seqs of the CURRENT entries — into one new broadcast, and
+    *     re-wrap the mask over the raw scans.
+    * A read right after an append therefore runs no job here, and one
+    * right after an upsert reads only the new equality-delete file.
     */
   private[dsv2] def plan(
       spark: SparkSession,
       entries: Seq[GraftCatalog#TableEntry],
       canonical: Option[StructType],
-      required: StructType): Option[Seq[RDD[ColumnarBatch]]] = {
+      required: StructType,
+      prev: Pieces): Option[(Seq[RDD[ColumnarBatch]], Pieces)] = {
     if (disableForProbes) return None
     if (required.isEmpty) return None // COUNT(*) zero-column reads: row path
     if (!required.fields.forall(f => maskable(f.dataType))) return None
@@ -249,15 +300,29 @@ object GraftColumnarMask {
     val data = entries.filter(_.kind == "data")
     if (data.isEmpty || !data.forall(_.format == "parquet")) return None
 
-    // resolve every eq-delete entry's key columns to current-schema names
-    // (by recorded field id when present — rename-robust, the same
-    // discipline readEqualityDeletes applies — by recorded name otherwise)
-    // and collect the bounded key sets driver-side
-    val eqSets: Option[Seq[EqSet]] =
-      if (eqEntries.isEmpty) Some(Nil)
-      else collectEqSets(spark, eqEntries, canonical)
-    if (eqSets.isEmpty) return None
-    val eqKeyNames: Seq[String] = eqSets.get.flatMap(_.cols).distinct
+    // eq keys resolve, and scans locate columns, against the canonical
+    // schema: a predecessor planned under another one lends nothing
+    val reuse = if (prev.canonical == canonical) prev else NoPieces
+    def keyOf(e: GraftCatalog#TableEntry) = CompactionRunner.canonKey(e.path)
+
+    // step 1: the delete files, each decoded once
+    val posRows = decodePos(spark, pos, reuse.pos).getOrElse(return None)
+    val eqRows = decodeEq(spark, eqEntries, canonical, reuse.eq).getOrElse(return None)
+
+    // one key set per resolved key vector: each file's tuples at its
+    // entry's sequence number, the newest delete per key winning
+    val eqSets: Seq[EqSet] = eqEntries.groupBy(e => eqRows(keyOf(e)).cols).toSeq
+      .sortBy(_._2.map(_.path).min)
+      .map { case (cols, es) =>
+        val keys = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+        es.foreach { e =>
+          eqRows(keyOf(e)).keys.foreach { k =>
+            if (e.seqNum > keys.getOrElse(k, Long.MinValue)) keys(k) = e.seqNum
+          }
+        }
+        EqSet(cols, Nil, keys.toMap, es.map(_.seqNum).max)
+      }
+    val eqKeyNames: Seq[String] = eqSets.flatMap(_.cols).distinct
 
     // the scan projects `required` plus any eq-key columns it lacks (the
     // probe reads them; the serving strips them back off)
@@ -270,14 +335,14 @@ object GraftColumnarMask {
       if (resolved.exists(_.isEmpty)) return None
       resolved.flatten
     }
-    val scanFields: Array[StructField] =
-      FieldIds.stripIds(StructType(required.fields ++ extraFields)).fields
+    val scanFields: Seq[StructField] = ArraySeq.unsafeWrapArray(
+      FieldIds.stripIds(StructType(required.fields ++ extraFields)).fields)
     if (!scanFields.forall(f => maskable(f.dataType))) return None
     // probe types come from the SCANNED fields so the executor-side
     // dispatch matches the vectors it reads
     val typeByName = scanFields.map(f => f.name -> f.dataType).toMap
     val typedSets: Seq[EqSet] =
-      eqSets.get.map(s => s.copy(types = s.cols.map(typeByName)))
+      eqSets.map(s => s.copy(types = s.cols.map(typeByName)))
     if (!typedSets.forall(_.types.forall(probeable))) return None
     // the DRIVER-collected key values must have normalized to exactly the
     // class the executor-side probe produces for the SCANNED column type.
@@ -321,30 +386,25 @@ object GraftColumnarMask {
       }
     }
 
-    // one bare pinned-schema scan per footer-schema group; every group
-    // must carry the scanned columns verbatim — and under the canonical
-    // id binding — or the whole read refuses. The relations are built over
-    // the entries' own paths (no listing job)
-    val groups = CompactionRunner.schemaGroups(spark, data.map(_.path))
-    val plans: Seq[Option[DataFrame]] = groups.map { case (fileSchema, paths) =>
-      val ok = scanFields.forall(rf =>
-        fileSchema.fields.exists(ff =>
-          ff.name == rf.name && ff.dataType == rf.dataType) &&
-          bindingOk(fileSchema, canonical, rf.name))
-      if (!ok) None
-      else Some(org.apache.spark.sql.graftbridge.DatasetBridge
-        .parquetFiles(spark, fileSchema, paths)
-        .select(scanFields.map(f => col(f.name)).toIndexedSeq :+ col("_metadata"): _*))
-    }
-    if (!plans.forall(_.isDefined)) return None
-    val bridge = org.apache.spark.sql.graftbridge.DatasetBridge
-    // the raw scan batches: scanned data columns + FLAT metadata columns
-    // (selecting `_metadata` plans a struct-building Project over a scan
-    // whose output already carries file_path / row_index — the raw leaf
-    // is exactly what masking needs, located by name per group)
-    val colRdds = plans.flatten.map(df => bridge.columnarScanRaw(df))
-    if (!colRdds.forall(_.isDefined)) return None
-    val located: Seq[Option[Located]] = colRdds.flatten.map { case (_, names) =>
+    // step 2: one bare pinned-schema scan per footer-schema group; every
+    // group must carry the scanned columns verbatim — and under the
+    // canonical id binding — or the whole read refuses. A group the
+    // predecessor planned over the same files and fields is reused; the
+    // others are planned over the entries' own paths (no listing job)
+    val planned = reuse.scans.map(s => s.paths -> s).toMap
+    val scans: Seq[RawScan] =
+      CompactionRunner.schemaGroups(spark, data.map(_.path)).map { case (fileSchema, paths) =>
+        val ok = scanFields.forall(rf =>
+          fileSchema.fields.exists(ff =>
+            ff.name == rf.name && ff.dataType == rf.dataType) &&
+            bindingOk(fileSchema, canonical, rf.name))
+        if (!ok) return None
+        planned.get(paths)
+          .filter(s => s.schema == fileSchema && s.scanFields == scanFields)
+          .getOrElse(rawScan(spark, fileSchema, paths, scanFields).getOrElse(return None))
+      }
+    val located: Seq[Located] = scans.map { s =>
+      val names = s.names
       val dataIdx = required.fields.map(f => names.indexOf(f.name))
       val eqIdx = eqProbe.map(_.cols.map(names.indexOf).toArray).toArray
       // the leaf scan appends the flat metadata columns AFTER the data
@@ -358,38 +418,19 @@ object GraftColumnarMask {
       if (dataIdx.forall(i => i >= 0 && i < metaFrom) &&
           eqIdx.forall(_.forall(i => i >= 0 && i < metaFrom)) &&
           fileIdx >= 0 && rowIdx >= 0)
-        Some(Located(dataIdx, eqIdx, fileIdx, rowIdx))
-      else None
+        Located(dataIdx, eqIdx, fileIdx, rowIdx)
+      else return None
     }
-    if (!located.forall(_.isDefined)) return None
 
-    // driver-side position-delete set: canonical path -> sorted positions
-    // (bounded by MaxDeleteRows above — the same driver-sized metadata
-    // posture as the reference's in-memory delete vector). Deletion-vector
-    // sidecars ARE this structure on disk — decode them directly; parquet
-    // row files collect through one scan.
-    val conf = spark.sessionState.newHadoopConf()
-    // dispatch on the RECORDED entry format (no per-file sniff; entries
-    // always carry it — commits stamp "parquet" or "dv")
-    val (dvEntries, pqEntries) = pos.partition(_.format == "dv")
-    val (dvFiles, pqFiles) = (dvEntries.map(_.path), pqEntries.map(_.path))
-    val pqRows: Seq[(String, Long)] =
-      if (pqFiles.isEmpty) Nil
-      else CompactionRunner.inferredParquet(spark, pqFiles)
-        .select(col("file_path"), col("pos"))
-        .collect().toSeq
-        .map(r => (CompactionRunner.canonPath(r.getString(0)), r.getLong(1)))
-    val dvRows: Seq[(String, Long)] = dvFiles.flatMap(p =>
-      graft.sources.DeletionVectors.read(p, conf).iterator.flatMap {
-        case (f, ps) => ps.iterator.map(x => (CompactionRunner.canonPath(f), x))
-      })
-    // keyed by the canonical literal-normalized form (canonKey) — the
-    // domain the scan-side lookup below decodes into; grouping BY the key
-    // merges positions recorded under cosmetically different renderings
-    // of one file instead of overwriting them
-    val byFile: Map[String, Array[Long]] = (pqRows ++ dvRows)
-      .groupBy(r => CompactionRunner.canonKey(r._1))
-      .map { case (p, rs) => p -> rs.map(_._2).distinct.sorted.toArray }
+    // step 3: the driver-side position-delete set: canonical path ->
+    // sorted positions (bounded by MaxDeleteRows above — the same
+    // driver-sized metadata posture as the reference's in-memory delete
+    // vector). Merged BY the canonKey, so positions recorded under
+    // cosmetically different renderings of one file (or by several
+    // delete files) unite instead of overwriting each other
+    val byFile: Map[String, Array[Long]] = posRows.values.flatten
+      .groupMapReduce(_._1)(_._2)(_ ++ _)
+      .map { case (f, ps) => f -> sortedUnique(ps) }
     // each data file's sequence number — what the eq-delete `seq <` guard
     // compares against (per-file constant, the reference's
     // `sys_hidden_seq_num` fabrication)
@@ -398,9 +439,9 @@ object GraftColumnarMask {
     val eqMaxSeq: Long = eqProbe.map(_.maxSeq).foldLeft(Long.MinValue)(math.max)
     val bc = spark.sparkContext.broadcast((byFile, eqProbe, seqByFile))
 
-    Some(colRdds.flatten.zip(located.flatten).map { case ((rdd, _), loc) =>
+    val masked = scans.zip(located).map { case (s, loc) =>
       val requiredLocal = required
-      rdd.mapPartitions({ it =>
+      s.rdd.mapPartitions({ it =>
         val (posByFile, eqSets, seqOf) = bc.value
         it.map { batch =>
           val n = batch.numRows()
@@ -442,62 +483,154 @@ object GraftColumnarMask {
           }
         }
       }, preservesPartitioning = true)
+    }
+    Some((masked, new Pieces(canonical, posRows, eqRows, scans)))
+  }
+
+  /** The raw leaf scan of one footer-schema group: the scanned data
+    * columns + FLAT metadata columns (selecting `_metadata` plans a
+    * struct-building Project over a scan whose output already carries
+    * file_path / row_index — the raw leaf is exactly what masking needs,
+    * located by name). The relation is built over the entries' own paths.
+    */
+  private def rawScan(
+      spark: SparkSession,
+      fileSchema: StructType,
+      paths: Seq[String],
+      scanFields: Seq[StructField]): Option[RawScan] = {
+    val bridge = org.apache.spark.sql.graftbridge.DatasetBridge
+    val df = bridge.parquetFiles(spark, fileSchema, paths)
+      .select(scanFields.map(f => col(f.name)) :+ col("_metadata"): _*)
+    bridge.columnarScanRaw(df).map { case (rdd, names) =>
+      RawScan(fileSchema, paths, scanFields, rdd, names)
+    }
+  }
+
+  /** `ps` sorted ascending without repeats. */
+  private def sortedUnique(ps: Array[Long]): Array[Long] = {
+    val a = ps.clone()
+    java.util.Arrays.sort(a)
+    var n = 0
+    var i = 0
+    while (i < a.length) {
+      if (n == 0 || a(n - 1) != a(i)) { a(n) = a(i); n += 1 }
+      i += 1
+    }
+    if (n == a.length) a else java.util.Arrays.copyOf(a, n)
+  }
+
+  /** Positions grouped by the canonKey of the data file they delete in. */
+  private def byDataFile(rows: Iterator[(String, Long)]): Map[String, Array[Long]] =
+    rows.toSeq
+      .groupMap(r => CompactionRunner.canonKey(CompactionRunner.canonPath(r._1)))(_._2)
+      .map { case (f, ps) => f -> ps.toArray }
+
+  /** The position-delete files of `pos` decoded, keyed by canonKey: those
+    * in `known` as they are, the rest read — deletion-vector sidecars ARE
+    * the decoded structure on disk and decode on the driver; parquet row
+    * files collect through one scan, attributed to their file by
+    * `_metadata.file_path`. None when a collected row names no requested
+    * file (a canonicalization divergence: unprovable, the row path serves).
+    */
+  private def decodePos(
+      spark: SparkSession,
+      pos: Seq[GraftCatalog#TableEntry],
+      known: Map[String, Map[String, Array[Long]]])
+      : Option[Map[String, Map[String, Array[Long]]]] = {
+    val wanted = pos.map(e => CompactionRunner.canonKey(e.path) -> e).toMap
+    val fresh = wanted.filter { case (k, _) => !known.contains(k) }
+    // dispatch on the RECORDED entry format (no per-file sniff; entries
+    // always carry it — commits stamp "parquet" or "dv")
+    val (dvs, pqs) = fresh.partition(_._2.format == "dv")
+    lazy val conf = spark.sessionState.newHadoopConf()
+    val fromDv = dvs.map { case (k, e) =>
+      k -> byDataFile(graft.sources.DeletionVectors.read(e.path, conf).iterator
+        .flatMap { case (f, ps) => ps.iterator.map(f -> _) })
+    }
+    val fromPq: Map[String, Map[String, Array[Long]]] =
+      if (pqs.isEmpty) Map.empty
+      else {
+        val rows = CompactionRunner.inferredParquet(spark, pqs.values.map(_.path).toSeq)
+          .select(col("_metadata.file_path"), col("file_path"), col("pos"))
+          .collect()
+          .groupBy(r => CompactionRunner.canonDecoded(r.getString(0)))
+        if (!rows.keysIterator.forall(pqs.contains)) return None
+        pqs.map { case (k, _) =>
+          k -> byDataFile(rows.getOrElse(k, Array.empty).iterator
+            .map(r => (r.getString(1), r.getLong(2))))
+        }
+      }
+    Some(wanted.map { case (k, _) =>
+      k -> known.getOrElse(k, fromDv.getOrElse(k, fromPq(k)))
     })
   }
 
-  /** Read the equality-delete files (grouped by identical key vectors,
-    * each path's rows tagged with its entry's sequence number) and build
-    * the probe maps. None when anything refuses provability: unresolvable
-    * key ids, non-probe-able value types, nulls are fine (a null key
-    * value matches nothing — SQL equality — so such delete rows are
-    * simply dropped from the probe map).
+  /** The equality-delete files of `eqEntries` decoded, keyed by canonKey:
+    * those in `known` as they are, the rest read in one job per key
+    * signature (see [[decodeEqFiles]]). None when any refuses provability.
     */
-  private def collectEqSets(
+  private def decodeEq(
       spark: SparkSession,
       eqEntries: Seq[GraftCatalog#TableEntry],
-      canonical: Option[StructType]): Option[Seq[EqSet]] = {
-    val bySig = eqEntries.groupBy(e => (e.eqCols, e.eqIds)).toSeq
-      .sortBy(_._2.head.path)
-    val sets = bySig.map { case ((eqCols, eqIds), es) =>
-      // a key-less eq-delete entry is corrupt metadata: an EMPTY key tuple
-      // would match every older row here while the row path fails loudly
-      // — refuse so the row path's named error surfaces instead of the
-      // two serving paths diverging on the same snapshot
-      if (eqCols.isEmpty && eqIds.isEmpty) return None
-      val paths = es.map(_.path).distinct
-      // keyed canonKey like the pos-delete maps: the lookup below decodes
-      // the scanned rendering into the same literal-normalized domain
-      // (an eq-delete FILE under a spacey path would otherwise refuse the
-      // whole set and silently degrade every read to the row-path join)
-      val seqByPath = es.map(e =>
-        CompactionRunner.canonKey(e.path) -> e.seqNum).toMap
-      val raw = CompactionRunner.inferredParquet(spark, paths)
-      // (delete-file column, data-side name) — the SAME resolution the
-      // row path applies ([[FieldIds.resolveEqColumns]], one shared
-      // implementation): ids bind to footer columns, names fall back
-      val resolved: Option[Seq[(String, String)]] =
-        FieldIds.resolveEqColumns(raw.schema, eqCols, eqIds, canonical)
-      resolved.flatMap { rs =>
-        val delCols = rs.map(_._1)
-        if (!delCols.forall(raw.schema.fieldNames.contains)) None
-        else {
-          val collected = raw
-            .select(delCols.map(col) :+ col("_metadata.file_path"): _*)
-            .collect()
-          val maxSeq = es.map(_.seqNum).max
-          val keys = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
-          var bad = false
-          collected.foreach { r =>
+      canonical: Option[StructType],
+      known: Map[String, EqRows]): Option[Map[String, EqRows]] = {
+    val wanted = eqEntries.map(e => CompactionRunner.canonKey(e.path) -> e).toMap
+    val fresh = wanted.filter { case (k, _) => !known.contains(k) }.values.toSeq
+    val read = fresh.groupBy(e => (e.eqCols, e.eqIds)).toSeq.map {
+      case ((eqCols, eqIds), es) =>
+        decodeEqFiles(spark, es.map(_.path), eqCols, eqIds, canonical)
+    }
+    if (!read.forall(_.isDefined)) None
+    else {
+      val fromFiles = read.flatten.flatten.toMap
+      Some(wanted.map { case (k, _) => k -> known.getOrElse(k, fromFiles(k)) })
+    }
+  }
+
+  /** Read equality-delete files sharing one key signature in one job and
+    * decode each file's key tuples. None when anything refuses
+    * provability: a key-less signature, unresolvable key ids, a value that
+    * does not normalize, a row attributed to no requested file. Nulls are
+    * fine (a null key value matches nothing — SQL equality — so such rows
+    * are simply dropped).
+    */
+  private def decodeEqFiles(
+      spark: SparkSession,
+      paths: Seq[String],
+      eqCols: Seq[String],
+      eqIds: Seq[Int],
+      canonical: Option[StructType]): Option[Seq[(String, EqRows)]] = {
+    // a key-less eq-delete entry is corrupt metadata: an EMPTY key tuple
+    // would match every older row here while the row path fails loudly
+    // — refuse so the row path's named error surfaces instead of the
+    // two serving paths diverging on the same snapshot
+    if (eqCols.isEmpty && eqIds.isEmpty) return None
+    val raw = CompactionRunner.inferredParquet(spark, paths)
+    // (delete-file column, data-side name) — the SAME resolution the
+    // row path applies ([[FieldIds.resolveEqColumns]], one shared
+    // implementation): ids bind to footer columns, names fall back
+    FieldIds.resolveEqColumns(raw.schema, eqCols, eqIds, canonical).flatMap { rs =>
+      val delCols = rs.map(_._1)
+      if (!delCols.forall(raw.schema.fieldNames.contains)) None
+      else {
+        // keyed canonKey like the pos-delete maps: the scanned rendering
+        // decodes into the same literal-normalized domain (an eq-delete
+        // FILE under a spacey path would otherwise refuse the whole set
+        // and silently degrade every read to the row-path join)
+        val byFile = paths.map(p => CompactionRunner.canonKey(p) ->
+          scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]).toMap
+        var bad = false
+        raw.select(delCols.map(col) :+ col("_metadata.file_path"): _*)
+          .collect()
+          .foreach { r =>
             // a delete row whose _metadata.file_path matches no entry's
             // canonical path is UNPROVABLE (a canonicalization divergence
-            // — URI scheme, symlink — between the entry list and the scan)
-            // and refuses the whole set back to the row-based anti join:
-            // defaulting it to the group max seq would apply the delete
-            // with an INFLATED sequence and silently drop rows re-inserted
-            // between the real delete and the group max
-            val seq = seqByPath.getOrElse(
+            // — URI scheme, symlink — between the entry list and the
+            // scan): its sequence number is unknown, so the whole set
+            // refuses back to the row-based anti join
+            val buf = byFile.getOrElse(
               CompactionRunner.canonDecoded(r.getString(delCols.length)),
-              { bad = true; maxSeq })
+              { bad = true; null })
             val vals = new Array[Any](delCols.length)
             var i = 0
             var anyNull = false
@@ -510,18 +643,12 @@ object GraftColumnarMask {
               i += 1
             }
             // null key values match nothing under SQL equality
-            if (!bad && !anyNull) {
-              val key = ArraySeq.unsafeWrapArray(vals): Seq[Any]
-              val prev = keys.getOrElse(key, Long.MinValue)
-              if (seq > prev) keys(key) = seq
-            }
+            if (!bad && !anyNull) buf += ArraySeq.unsafeWrapArray(vals)
           }
-          if (bad) None
-          else Some(EqSet(rs.map(_._2), Nil, keys.toMap, maxSeq))
-        }
+        if (bad) None
+        else Some(byFile.toSeq.map { case (k, b) => k -> EqRows(rs.map(_._2), b.toArray) })
       }
     }
-    if (sets.forall(_.isDefined)) Some(sets.flatten) else None
   }
 
   /** Position-only keep vector via the two-pointer sweep (row indices and

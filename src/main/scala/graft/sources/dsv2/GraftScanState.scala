@@ -35,6 +35,12 @@ import graft.sources.{CompactionRunner, GraftCatalog}
   * reports every pushed filter residual, so serving unfiltered rows of the
   * surviving files is exact.
   *
+  * A head state is built from the previous head state of the same table
+  * and projection: the masked plan decodes only the delete files, and
+  * re-plans only the footer-schema groups, that the commit between them
+  * changed ([[GraftColumnarMask.plan]]'s pieces). A build from nothing is
+  * the same function over empty pieces.
+  *
   * A plan that cannot be sliced by file (a shuffle-bearing row path) keeps
   * its per-filter served groups inside the state instead, under the same
   * LRU rule as the states themselves. Runtime-filtered (DPP) reads prune
@@ -45,7 +51,8 @@ private[dsv2] final class GraftScanState private (
     val snapshotId: Long,
     entries: Seq[GraftCatalog#TableEntry],
     sliced: Option[Seq[GraftSlices]],
-    maskedEq: Option[Boolean]) {
+    maskedEq: Option[Boolean],
+    private val pieces: GraftColumnarMask.Pieces) {
 
   private val unsliced = GraftScanState.lru[Seq[String], Seq[GraftServedGroup]]()
 
@@ -110,22 +117,26 @@ private[dsv2] object GraftScanState {
         size() > MaxEntries
     }
 
-  /** Every dimension a served plan depends on. The session's UUID (never
-    * reused, unlike an identity hash) keeps rdds of a stopped session's
-    * context out of a new one; the table's creation UUID separates a
-    * dropped-and-recreated table, whose snapshot ids restart at 1; pinned
-    * and head reads of one snapshot prune differently; the projection
-    * shapes the planned scan; the probe switch decides masked vs row.
+  /** Every dimension a served plan depends on but the snapshot. The
+    * session's UUID (never reused, unlike an identity hash) keeps rdds of
+    * a stopped session's context out of a new one; the table's creation
+    * UUID separates a dropped-and-recreated table, whose snapshot ids
+    * restart at 1; the projection shapes the planned scan; the probe
+    * switch decides masked vs row. Head states of one lineage are built
+    * from each other.
     */
-  private final case class Key(
+  private final case class Lineage(
       session: String,
       root: String,
       table: String,
       tableUuid: String,
-      pinned: Boolean,
-      snapshotId: Long,
       projection: String,
       masksDisabled: Boolean)
+
+  /** A state's key: its lineage, pinned or head (they prune differently),
+    * and the snapshot.
+    */
+  private final case class Key(lineage: Lineage, pinned: Boolean, snapshotId: Long)
 
   private val states = lru[Key, GraftScanState]()
 
@@ -143,40 +154,57 @@ private[dsv2] object GraftScanState {
       runtimeKeep: Option[Set[String]]): Seq[GraftServedGroup] = {
     val cat = new GraftCatalog(root)
     val sid = asOf.getOrElse(cat.currentSnapshotId(table))
-    val key = Key(DatasetBridge.sessionUUID(spark), root, table,
-      cat.tableUuid(table).getOrElse(""), asOf.isDefined, sid,
-      required.catalogString, GraftColumnarMask.disableForProbes)
+    val lineage = Lineage(DatasetBridge.sessionUUID(spark), root, table,
+      cat.tableUuid(table).getOrElse(""), required.catalogString,
+      GraftColumnarMask.disableForProbes)
+    val key = Key(lineage, asOf.isDefined, sid)
     val state = states.synchronized(Option(states.get(key))).getOrElse {
-      val built = build(spark, root, table, cat, sid, required)
+      // a head state is built from the most recently used head state of
+      // its lineage (the states iterate least recently used first); a
+      // pinned one from nothing
+      val prev =
+        if (asOf.isDefined) GraftColumnarMask.NoPieces
+        else states.synchronized {
+          var last = GraftColumnarMask.NoPieces
+          states.forEach((k, st) => if (k.lineage == lineage && !k.pinned) last = st.pieces)
+          last
+        }
+      val built = build(spark, root, table, cat, sid, required, prev)
       states.synchronized(states.put(key, built))
       built
     }
     state.serve(spark, cat, root, table, asOf.isDefined, required, filters, runtimeKeep)
   }
 
+  /** The one state builder: `prev` lends the pieces of a masked plan it
+    * can reuse ([[GraftColumnarMask.plan]]); [[GraftColumnarMask.NoPieces]]
+    * builds from nothing.
+    */
   private def build(
       spark: SparkSession,
       root: String,
       table: String,
       cat: GraftCatalog,
       sid: Long,
-      required: StructType): GraftScanState = {
+      required: StructType,
+      prev: GraftColumnarMask.Pieces): GraftScanState = {
     val entries = cat.loadEntriesAt(table, sid)
     def slices[R](plans: Seq[Option[(R, Seq[FilePartition])]],
         mk: (R, Seq[Partition]) => GraftSlices): Option[Seq[GraftSlices]] =
       if (plans.nonEmpty && plans.forall(_.isDefined))
         Some(plans.flatten.map { case (rdd, parts) => mk(rdd, parts) })
       else None
-    val masked: Option[Seq[GraftSlices]] =
+    val masked: Option[(Seq[GraftSlices], GraftColumnarMask.Pieces)] =
       if (required.fieldNames.exists(n => n == "_file" || n == "_pos")) None
-      else GraftColumnarMask.plan(spark, entries, cat.schemaAt(table, sid), required)
-        .flatMap(rdds => slices(
-          rdds.map(r => DatasetBridge.fileScanPartitions(r).map(r -> _)),
-          GraftColumnarSlices(null, _, _)))
+      else GraftColumnarMask.plan(spark, entries, cat.schemaAt(table, sid), required, prev)
+        .flatMap { case (rdds, pieces) =>
+          slices(rdds.map(r => DatasetBridge.fileScanPartitions(r).map(r -> _)),
+            GraftColumnarSlices(null, _, _)).map(_ -> pieces)
+        }
     masked match {
-      case Some(groups) =>
+      case Some((groups, pieces)) =>
         new GraftScanState(sid, entries, Some(groups),
-          Some(entries.exists(_.kind == "eqdel")))
+          Some(entries.exists(_.kind == "eqdel")), pieces)
       case None =>
         // statsPrune = false: with no filters there is nothing to prune,
         // and the plan must cover every file of the snapshot
@@ -185,7 +213,7 @@ private[dsv2] object GraftScanState {
         val plan = slices(fs.map(DatasetBridge.columnarFileScan(_, peelFilters = true)),
             GraftColumnarSlices(null, _, _))
           .orElse(slices(fs.map(DatasetBridge.rowFileScan), GraftRowSlices(null, _, _)))
-        new GraftScanState(sid, entries, plan, None)
+        new GraftScanState(sid, entries, plan, None, GraftColumnarMask.NoPieces)
     }
   }
 
@@ -193,8 +221,7 @@ private[dsv2] object GraftScanState {
     * the way Spark packs a scan of just those files: descending size into
     * partitions of at most `min(maxPartitionBytes, max(openCost,
     * bytes / parallelism))`. Every file kept serves the planned partitions
-    * unchanged; none kept serves one empty partition (an empty
-    * `FilePartition` computes an empty iterator).
+    * unchanged; none kept serves no partition (no task runs for the group).
     */
   private def prune(
       spark: SparkSession,
@@ -204,7 +231,7 @@ private[dsv2] object GraftScanState {
     val kept = files.filter(pf =>
       keep.contains(CompactionRunner.canonDecoded(pf.filePath.toString)))
     if (kept.size == files.size) parts
-    else if (kept.isEmpty) Seq(FilePartition(0, Array.empty))
+    else if (kept.isEmpty) Nil
     else {
       val conf = spark.sessionState.conf
       val openCost = conf.filesOpenCostInBytes

@@ -1395,7 +1395,9 @@ final class GraftRddReaderFactory
       case GraftColumnarRddInputPartition(r, p) => (r, p)
       case k: GraftKeyedColumnarRddInputPartition => (k.rdd, k.partition)
     }
-    val it = rdd.iterator(part, org.apache.spark.TaskContext.get())
+    val it = org.apache.spark.sql.graftbridge.DatasetBridge.countedOnce(
+      rdd.iterator(part, org.apache.spark.TaskContext.get()),
+      (b: org.apache.spark.sql.vectorized.ColumnarBatch) => b.numRows())
     new org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.vectorized.ColumnarBatch] {
       private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
@@ -1415,7 +1417,9 @@ final class GraftRddReaderFactory
       case GraftRddInputPartition(r, p) => (r, p)
       case k: GraftKeyedRddInputPartition => (k.rdd, k.partition)
     }
-    val it = rdd.iterator(part, org.apache.spark.TaskContext.get())
+    val it = org.apache.spark.sql.graftbridge.DatasetBridge.countedOnce(
+      rdd.iterator(part, org.apache.spark.TaskContext.get()),
+      (_: org.apache.spark.sql.catalyst.InternalRow) => 1)
     new org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.catalyst.InternalRow] {
       private var current: org.apache.spark.sql.catalyst.InternalRow = _

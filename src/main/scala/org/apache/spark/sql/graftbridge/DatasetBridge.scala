@@ -31,6 +31,43 @@ object DatasetBridge {
     case other => String.valueOf(System.identityHashCode(other))
   }
 
+  /** `it` — an RDD iterator a DSv2 reader serves inside Spark's
+    * `DataSourceRDD` — with its task's input records counted ONCE. The
+    * `DataSourceRDD` counts every row it serves, and a file scan inside
+    * `it` has already counted every row it read: left alone, a doorway
+    * scan reports both (a 150k-row table reads 300k). Whatever the
+    * wrapped scan counts while it is pulled is kept, and as much of what
+    * the reader serves is taken back: the task reports the larger of the
+    * rows its scan read and the rows it served — the first for a file
+    * scan, as plain Spark does (masked rows were read), the second for an
+    * iterator that counts nothing (a shuffle read, an in-memory rdd).
+    */
+  def countedOnce[A](it: Iterator[A], rows: A => Int): Iterator[A] = {
+    val metrics = org.apache.spark.TaskContext.get().taskMetrics().inputMetrics
+    new Iterator[A] {
+      private var scanned = 0L
+      private var served = 0L
+      private var taken = 0L
+      private def scanning[B](pull: => B): B = {
+        val before = metrics.recordsRead
+        val b = pull
+        scanned += metrics.recordsRead - before
+        b
+      }
+      override def hasNext: Boolean = scanning(it.hasNext)
+      override def next(): A = {
+        val a = scanning(it.next())
+        served += rows(a)
+        val take = math.min(served, scanned) - taken
+        if (take > 0) {
+          metrics.incRecordsRead(-take)
+          taken += take
+        }
+        a
+      }
+    }
+  }
+
   /** Re-wrap a V1 streaming sink's per-batch frame as a BATCH frame over
     * the SAME executed rows — `internalCreateDataFrame(isStreaming =
     * false)` on the batch's own physical plan, the doorway every V1 sink

@@ -294,13 +294,11 @@ class GraftBatchServingSpec extends SparkSpec {
     val boundRows = data.filter(e =>
       matchBuckets.contains(e.partitionVals("k_bucket").toInt))
       .map(_.recordCount).sum
-    // DataSourceRDD double-counts: the V2 reader wrapper AND the inner
-    // FileScanRDD both register each row as read, so the pruned scan
-    // reports 2x its rows; the dim adds its ~100 (subquery + build)
-    assert(records <= 2 * boundRows + 300,
+    // the pruned scan reports each row it read once; the dim adds its
+    // ~100 (subquery + build)
+    assert(records <= boundRows + 300,
       s"runtime join pruning must read only the ${matchBuckets.size} " +
-        s"matching buckets' rows (2x-counted <= ${2 * boundRows} of " +
-        s"${2 * total}), read $records")
+        s"matching buckets' rows (<= $boundRows of $total), read $records")
   }
 
   test("co-bucketed tables storage-partition join with ZERO shuffles") {
@@ -411,8 +409,7 @@ class GraftBatchServingSpec extends SparkSpec {
       .inKeepPaths(spark, "t", "k", Seq(7L, 13L, 700L))
     assert(keep.nonEmpty && keep.size <= 3,
       s"fixture must prune to a small keep set, got ${keep.size}")
-    // the records-read metric over-counts uniformly on this serving path,
-    // so compare the filtered read against a baseline measured the same way
+    // compare the filtered read against a baseline measured the same way
     val (_, recordsAll) = probe {
       spark.sql(s"SELECT k, v FROM $g.t").collect()
     }
