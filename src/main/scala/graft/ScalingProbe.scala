@@ -896,7 +896,7 @@ object ScalingProbe {
     locally {
       import graft.sources.{GraftCatalog, IcebergManifest}
       import graft.sources.CompactionRunner.DataFileStats
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = graft.sources.CompactionRunner.defaultHadoopConf()
       val totalFiles = 2048 // constant corpus; only the snapshot split varies
       val snapCounts = Seq(4, 16, 64)
       val depth = 4

@@ -1452,7 +1452,7 @@ object MorQueries {
     require(java.nio.file.Files.readString(metaPath)
       .contains("\"format-version\":3"),
       "a DV-bearing export must declare format-version 3")
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = graft.sources.CompactionRunner.defaultHadoopConf()
     // walk the exported chain exactly like a stock reader: head snapshot
     // -> manifest list -> delete manifest -> per-blob DV entries
     val listPath = s"$root/o/snap-${cat.currentSnapshotId("o")}-manifest-list.avro"
@@ -1613,7 +1613,7 @@ object MorQueries {
          |"schemas":[{"schema-id":0,"type":"struct","fields":[$schemaFields]}],
          |"current-snapshot-id":-1,"snapshots":[]}""".stripMargin)
       .schemas.head._2
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = graft.sources.CompactionRunner.defaultHadoopConf()
     def szOf(p: String) = java.nio.file.Files.size(java.nio.file.Paths.get(p))
     val entries = Seq(
       graft.sources.IcebergManifest.ManifestEntry(

@@ -61,6 +61,21 @@ object CompactionRunner {
   final case class PosDeleteTask(
       path: String, format: String = "", sizeBytes: Long = -1L)
 
+  /** One parquet footer's manifest metadata ([[parquetFooterMetrics]]):
+    * rows and bytes are -1 when unknown; absent columns have no bound or
+    * count.
+    */
+  final case class FooterMetrics(
+      rows: Long,
+      bytes: Long,
+      colMins: Map[String, String],
+      colMaxs: Map[String, String],
+      nullCounts: Map[String, Long])
+
+  object FooterMetrics {
+    val Unreadable: FooterMetrics = FooterMetrics(-1L, -1L, Map.empty, Map.empty, Map.empty)
+  }
+
   /** An equality-delete file: path, its sequence number, and the equality
     * columns — preferably as field IDs (`equalityIds`, the reference's
     * `equality_ids`, resolved against each file's id metadata so renames
@@ -427,9 +442,7 @@ object CompactionRunner {
     if (paths.length <= 64) {
       val conf = spark.sessionState.newHadoopConf()
       paths.exists { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val reader = openParquet(p, conf)
         try !reader.getFooter.getFileMetaData.getSchema.getFields.asScala
           .exists(_.getId != null)
         finally reader.close()
@@ -473,31 +486,116 @@ object CompactionRunner {
             : Boolean = size() > 4096
       })
 
-  /** (rowCount, sizeBytes) of a parquet file from its footer + status —
-    * the manifest metadata Iceberg stamps at commit time, read driver-side
-    * (one footer per file, milliseconds). (-1, -1) when unreadable: an
-    * unknown count must stay unknown, never a guess.
+  /** A copy of the JVM's default Hadoop configuration, for metadata
+    * readers that have no session at hand. Every `new Configuration()`
+    * re-parses the XML default resources on its first lookup; a copy of
+    * one parsed instance does not.
     */
-  def parquetFooterCounts(
+  def defaultHadoopConf(): org.apache.hadoop.conf.Configuration =
+    new org.apache.hadoop.conf.Configuration(parsedDefaultConf)
+
+  private lazy val parsedDefaultConf: org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    c.size() // parse the default resources once, here
+    c
+  }
+
+  /** Open a parquet file's footer with read options built from `conf`.
+    * The one-argument `ParquetFileReader.open(in)` builds its options
+    * from a fresh `Configuration` (an XML re-parse per footer).
+    */
+  private[graft] def openParquet(
       p: String,
-      conf: org.apache.hadoop.conf.Configuration): (Long, Long) =
+      conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p), conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
+  /** The manifest metadata Iceberg stamps at commit time, read from one
+    * parquet footer + status: row count, size, and per-column bounds and
+    * null counts under [[graft.sources.dsv2.WriterStats]]' conservative
+    * rules — bounds only for signed integral columns and for ASCII strings
+    * of at most 64 chars (a footer cannot prove a floating column free of
+    * NaN; dates and timestamps have no consumer), and only when every row
+    * group records them; null counts only where every row group records
+    * one. String bounds are trusted only from the Java parquet writer,
+    * which never truncates them. [[FooterMetrics.Unreadable]] when the
+    * footer cannot be read: an unknown count must stay unknown, never a
+    * guess.
+    */
+  def parquetFooterMetrics(
+      p: String,
+      conf: org.apache.hadoop.conf.Configuration): FooterMetrics =
     try {
+      import org.apache.parquet.schema.LogicalTypeAnnotation._
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
       val path = new org.apache.hadoop.fs.Path(p)
       val size = path.getFileSystem(conf).getFileStatus(path).getLen
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val rows =
-        try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally reader.close()
-      (rows, size)
-    } catch { case _: Throwable => (-1L, -1L) }
+      val reader = openParquet(p, conf)
+      val footer = try reader.getFooter finally reader.close()
+      val blocks = footer.getBlocks.asScala.toSeq
+      val meta = footer.getFileMetaData
+      val javaWriter = Option(meta.getCreatedBy)
+        .exists(w => w.startsWith("parquet-mr") || w.startsWith("parquet-java"))
+      val mins = Map.newBuilder[String, String]
+      val maxs = Map.newBuilder[String, String]
+      val nulls = Map.newBuilder[String, Long]
+      // column chunks follow the schema's leaf order; a top-level flat
+      // column is a leaf with a one-segment path and no repetition
+      meta.getSchema.getColumns.asScala.zipWithIndex.foreach { case (c, i) =>
+        if (c.getPath.length == 1 && c.getMaxRepetitionLevel == 0) {
+          val name = c.getPath.head
+          val t = c.getPrimitiveType
+          val stats = blocks.map(b => b.getRowCount -> b.getColumns.get(i).getStatistics)
+          if (stats.forall { case (_, s) => s != null && s.isNumNullsSet })
+            nulls += name -> stats.map(_._2.getNumNulls).sum
+          val signedInt = t.getLogicalTypeAnnotation match {
+            case null => true
+            case a: IntLogicalTypeAnnotation => a.isSigned
+            case _ => false
+          }
+          val render: Option[Any => Option[String]] = t.getPrimitiveTypeName match {
+            case INT32 | INT64 if signedInt => Some(v => Some(v.toString))
+            case BINARY if javaWriter &&
+                t.getLogicalTypeAnnotation.isInstanceOf[StringLogicalTypeAnnotation] =>
+              Some { v =>
+                val b = v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
+                if (b.length <= 64 && b.forall(_ >= 0))
+                  Some(new String(b, java.nio.charset.StandardCharsets.US_ASCII))
+                else None
+              }
+            case _ => None
+          }
+          // every row group must bound its values: min/max recorded, or
+          // provably all null (a recorded null count equal to its rows —
+          // a writer may drop oversized min/max and keep the count)
+          val bounded = stats.forall { case (rows, s) =>
+            s != null && (s.hasNonNullValue || (s.isNumNullsSet && s.getNumNulls == rows))
+          }
+          val valued = stats.map(_._2).filter(s => s != null && s.hasNonNullValue)
+          if (bounded && valued.nonEmpty) render.foreach { r =>
+            val ord = Ordering.comparatorToOrdering(
+              t.comparator().asInstanceOf[java.util.Comparator[Any]])
+            for {
+              lo <- r(valued.map(_.genericGetMin: Any).min(ord))
+              hi <- r(valued.map(_.genericGetMax: Any).max(ord))
+            } { mins += name -> lo; maxs += name -> hi }
+          }
+        }
+      }
+      FooterMetrics(blocks.map(_.getRowCount).sum, size,
+        mins.result(), maxs.result(), nulls.result())
+    } catch { case _: Throwable => FooterMetrics.Unreadable }
 
-  /** Bounded daemon pool for the commit-path footer reads: at 100 TB a bulk
-    * append commits thousands of files, and a SERIAL per-file footer loop on
-    * object storage pays thousands of sequential remote roundtrips (~50–100
-    * ms each → minutes of driver wall). The pool overlaps them; bounded so a
-    * huge commit cannot spawn unbounded threads. Floored at 4 so the
-    * parallelism contract ([[FooterPoolSpec]]) holds on small-CPU boxes too.
+  /** Bounded daemon pool for driver-side parquet reads (commit-path
+    * footers, delete-file decodes): at 100 TB a bulk append commits
+    * thousands of files, and a SERIAL per-file loop on object storage pays
+    * thousands of sequential remote roundtrips (~50–100 ms each → minutes
+    * of driver wall). The pool overlaps them; bounded so a huge commit
+    * cannot spawn unbounded threads. Floored at 4 so the parallelism
+    * contract ([[FooterPoolSpec]]) holds on small-CPU boxes too.
     */
   private val footerPoolSize: Int =
     math.min(16, math.max(4, Runtime.getRuntime.availableProcessors()))
@@ -518,40 +616,39 @@ object CompactionRunner {
     */
   @volatile private[sources] var footerReadProbe: String => Unit = _ => ()
 
-  /** [[parquetFooterCounts]] over many files with the per-file reads fanned
-    * out on the bounded driver pool — result order matches `paths`. Same
-    * contract per file ((-1,-1) on an unreadable footer) and still ZERO
-    * Spark jobs, so the one-job-per-commit posture
-    * ([[graft.sources]] CommitFooterCountSpec) is unchanged; only the
-    * serial-roundtrip wall goes away. Short lists skip the pool (the
-    * handoff costs more than one local footer read).
+  /** `read` applied to every path, fanned out on the bounded driver pool —
+    * result order matches `paths`, and still ZERO Spark jobs. Short lists
+    * skip the pool (the handoff costs more than one local footer read).
+    * `read` must not throw: an exception surfaces from here, as the
+    * serial loop's would.
     */
-  def parquetFooterCountsBulk(
-      paths: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Seq[(Long, Long)] =
-    if (paths.lengthCompare(2) <= 0)
-      paths.map(parquetFooterCounts(_, conf))
+  private[graft] def onFooterPool[T](paths: Seq[String])(read: String => T): Seq[T] =
+    if (paths.lengthCompare(2) <= 0) paths.map(read)
     else {
-      import scala.jdk.CollectionConverters._
-      val tasks: java.util.List[java.util.concurrent.Callable[(Long, Long)]] =
+      val tasks: java.util.List[java.util.concurrent.Callable[T]] =
         paths.map { p =>
-          new java.util.concurrent.Callable[(Long, Long)] {
-            override def call(): (Long, Long) = {
+          new java.util.concurrent.Callable[T] {
+            override def call(): T = {
               footerReadProbe(p)
-              parquetFooterCounts(p, conf)
+              read(p)
             }
-          }: java.util.concurrent.Callable[(Long, Long)]
+          }: java.util.concurrent.Callable[T]
         }.asJava
-      // invokeAll blocks until every task ran; the per-file reader never
-      // throws (it maps failures to (-1,-1)), so get() cannot fail on a
-      // task exception — an interrupt propagates, as the serial loop's did
       footerPool.invokeAll(tasks).asScala.map(_.get()).toSeq
     }
 
+  /** [[parquetFooterMetrics]] over many files on the bounded driver pool
+    * ([[onFooterPool]]), so the one-job-per-commit posture
+    * ([[graft.sources]] CommitFooterCountSpec) is unchanged; only the
+    * serial-roundtrip wall goes away.
+    */
+  def parquetFooterMetricsBulk(
+      paths: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration): Seq[FooterMetrics] =
+    onFooterPool(paths)(parquetFooterMetrics(_, conf))
+
   private def footerDigest(p: String, conf: org.apache.hadoop.conf.Configuration): String = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = openParquet(p, conf)
     val schemaStr =
       try reader.getFooter.getFileMetaData.getSchema.toString
       finally reader.close()

@@ -171,7 +171,7 @@ object FieldIds {
 
   /** The equality-delete key resolution BOTH serving paths share (the
     * row-path anti join, `CompactionRunner.readEqualityDeletes`, and the
-    * vectorized mask, `GraftColumnarMask.collectEqSets` — ONE
+    * vectorized mask's driver decode, `GraftColumnarMask.decodeEq` — ONE
     * implementation so they can never drift and delete different row
     * sets): each recorded field id binds to the DELETE file's column via
     * its footer id metadata and re-aliases to the DATA schema's name for

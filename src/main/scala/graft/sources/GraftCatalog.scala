@@ -395,7 +395,7 @@ final class GraftCatalog(root: String,
       table: String,
       metadataLocation: String,
       conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration(),
+        CompactionRunner.defaultHadoopConf(),
       historyDepth: Option[Int] = None): Long = {
     validateSegments("table", table)
     if (table.contains("/")) {
@@ -895,7 +895,7 @@ final class GraftCatalog(root: String,
         .getOrElse {
           try {
             val b = Puffin.readFooter(ref.path,
-              new org.apache.hadoop.conf.Configuration())._1
+              CompactionRunner.defaultHadoopConf())._1
             GraftCatalog.statsFooterCache.put(ref.path, b)
             b
           } catch { case _: Exception => Nil }
@@ -924,7 +924,7 @@ final class GraftCatalog(root: String,
       : Map[String, GraftCatalog.EquiHeightHistogram] =
     tableStatistics(table, asOf).map { ref =>
       val byId = Option(GraftCatalog.histogramCache.get(ref.path)).getOrElse {
-        val conf = new org.apache.hadoop.conf.Configuration()
+        val conf = CompactionRunner.defaultHadoopConf()
         val blobs = Option(GraftCatalog.statsFooterCache.get(ref.path))
           .getOrElse {
             try {
@@ -1051,7 +1051,7 @@ final class GraftCatalog(root: String,
       incremental: Boolean = false,
       histograms: Boolean = false): Map[String, Long] = {
     import org.apache.spark.sql.functions._
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = spark.sessionState.newHadoopConf()
     val head = currentSnapshotId(table)
     val schema = currentSchema(table).getOrElse(
       org.apache.spark.sql.types.StructType(
@@ -1554,10 +1554,7 @@ final class GraftCatalog(root: String,
     import org.apache.spark.sql.types._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.conf.Configuration())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = CompactionRunner.openParquet(path, CompactionRunner.defaultHadoopConf())
     try {
       reader.getFooter.getFileMetaData.getSchema.getFields.asScala.flatMap { f =>
         if (!f.isPrimitive || f.isRepetition(
@@ -2009,8 +2006,8 @@ final class GraftCatalog(root: String,
         // file; an unreadable footer (-1) falls back to the scan count
         val hconf = spark.sessionState.newHadoopConf()
         val written = listParquetsIn(spark, delDir)
-        written.zip(CompactionRunner.parquetFooterCountsBulk(written, hconf))
-          .flatMap { case (p, (fr, fb)) =>
+        written.zip(CompactionRunner.parquetFooterMetricsBulk(written, hconf))
+          .flatMap { case (p, CompactionRunner.FooterMetrics(fr, fb, _, _, _)) =>
             val n = if (fr >= 0) fr else spark.read.parquet(p).count()
             if (n == 0) None
             else Some(GraftCatalog.AddedFile(p, "parquet", n,
@@ -2037,10 +2034,10 @@ final class GraftCatalog(root: String,
   private def posDeleteEntries(
       spark: SparkSession, paths: Seq[String], seq: Long): Seq[TableEntry] = {
     val conf = spark.sessionState.newHadoopConf()
-    paths.zip(CompactionRunner.parquetFooterCountsBulk(paths, conf))
-      .map { case (p, (rows, bytes)) =>
+    paths.zip(CompactionRunner.parquetFooterMetricsBulk(paths, conf))
+      .map { case (p, m) =>
         TableEntry("posdel", p, seq, "parquet", Nil,
-          recordCount = rows, sizeBytes = bytes)
+          recordCount = m.rows, sizeBytes = m.bytes)
       }
   }
 
@@ -2052,10 +2049,10 @@ final class GraftCatalog(root: String,
       spark: SparkSession, paths: Seq[String], seq: Long,
       keyCols: Seq[String], keyIds: Seq[Int]): Seq[TableEntry] = {
     val conf = spark.sessionState.newHadoopConf()
-    paths.zip(CompactionRunner.parquetFooterCountsBulk(paths, conf))
-      .map { case (p, (rows, bytes)) =>
+    paths.zip(CompactionRunner.parquetFooterMetricsBulk(paths, conf))
+      .map { case (p, m) =>
         TableEntry("eqdel", p, seq, "parquet", keyCols, keyIds,
-          recordCount = rows, sizeBytes = bytes)
+          recordCount = m.rows, sizeBytes = m.bytes)
       }
   }
 
@@ -2543,10 +2540,16 @@ final class GraftCatalog(root: String,
       case Some(s) => FieldIds.alignToSchema(updates, s)
       case None => updates
     }
-    aligned.write.mode("errorifexists").parquet(dataDir)
+    // the data side is written through a REBALANCE on the key columns (what
+    // Iceberg's Spark writer asks for under hash distribution): adaptive
+    // execution sizes the files, instead of one file per input partition
+    aligned.hint("rebalance", keyCols.map(org.apache.spark.sql.functions.col): _*)
+      .write.mode("errorifexists").parquet(dataDir)
     aligned.select(keyCols.map(org.apache.spark.sql.functions.col): _*)
       .distinct().write.mode("errorifexists").parquet(delDir)
-    def parquetsIn(d: String): Seq[String] = listParquetsIn(spark, d)
+    // footer metrics read outside the lock: an upsert's data files commit
+    // with counts and bounds like any other append
+    val counted = countedParquetsIn(spark, dataDir)
     withTableLock(table) {
       val entries = loadEntries(table)
       val seq = entries.map(_.seqNum).foldLeft(0L)(math.max) + 1
@@ -2560,8 +2563,10 @@ final class GraftCatalog(root: String,
       }
       val recordedIds = if (keyIds.length == keyCols.length) keyIds else Nil
       val newEntries =
-        parquetsIn(dataDir).map(p => TableEntry("data", p, seq, "parquet", Nil)) ++
-          eqDeleteEntries(spark, parquetsIn(delDir), seq, keyCols, recordedIds)
+        counted.map { case (p, m) =>
+          TableEntry("data", p, seq, "parquet", Nil, stats = footerStats(m),
+            recordCount = m.rows, sizeBytes = m.bytes)
+        } ++ eqDeleteEntries(spark, listParquetsIn(spark, delDir), seq, keyCols, recordedIds)
       val nextId = currentSnapshotId(table) + 1
       writeSnapshot(table, nextId, entries ++ newEntries)
       carrySchema(table, nextId - 1, nextId)
@@ -2570,15 +2575,16 @@ final class GraftCatalog(root: String,
     }
   }
 
-  /** `(path, rowCount, sizeBytes)` per non-empty parquet file under `dir`
-    * — parquet FOOTER reads, driver-side (one footer per file, the same
-    * cardinality as the manifest entries built from it), so the per-commit
-    * manifest counting costs no distributed job and never re-reads the
-    * just-written generation. Any unreadable footer falls back to the one
-    * distributed count pass this replaced.
+  /** Footer metrics (row count, size, column bounds and null counts) per
+    * non-empty parquet file under `dir` — parquet FOOTER reads,
+    * driver-side (one footer per file, the same cardinality as the
+    * manifest entries built from it), so the per-commit manifest counting
+    * costs no distributed job and never re-reads the just-written
+    * generation. Any unreadable footer falls back to the one distributed
+    * count pass this replaced (counts only, no stats).
     */
   private def countedParquetsIn(
-      spark: SparkSession, dir: String): Seq[(String, Long, Long)] = {
+      spark: SparkSession, dir: String): Seq[(String, CompactionRunner.FooterMetrics)] = {
     val files = listParquetsIn(spark, dir)
     if (files.isEmpty) return Nil
     val hconf = spark.sessionState.newHadoopConf()
@@ -2586,23 +2592,33 @@ final class GraftCatalog(root: String,
     // files at once, and serial per-file roundtrips would make the driver
     // commit O(files) sequential opens at 100 TB (r20 verdict's one
     // perf-weak mark) — still zero Spark jobs
-    val footer = files.zip(CompactionRunner.parquetFooterCountsBulk(files, hconf))
+    val footer = files.zip(CompactionRunner.parquetFooterMetricsBulk(files, hconf))
     val counted =
-      if (footer.forall(_._2._1 >= 0))
-        footer.map { case (p, (r, b)) => (p, r, b) }
+      if (footer.forall(_._2.rows >= 0)) footer
       else {
         import org.apache.spark.sql.functions.{col, count, lit}
         spark.read.parquet(files: _*)
           .groupBy(col("_metadata.file_path").as("path"),
             col("_metadata.file_size").as("size"))
           .agg(count(lit(1)).as("rc"))
-          .collect().toSeq.map(r => (r.getAs[String]("path"),
-            r.getAs[Long]("rc"), r.getAs[Long]("size")))
+          .collect().toSeq.map(r => r.getAs[String]("path") ->
+            CompactionRunner.FooterMetrics(r.getAs[Long]("rc"), r.getAs[Long]("size"),
+              Map.empty, Map.empty, Map.empty))
       }
     // zero-row part files carry no manifest entry (the empty-write
     // discipline; the distributed groupBy likewise emitted no row for them)
-    counted.filter(_._2 > 0L)
+    counted.filter(_._2.rows > 0L)
   }
+
+  /** A committed data file's snapshot entry from its footer metrics. */
+  private def footerCountedEntry(
+      p: String, m: CompactionRunner.FooterMetrics, seq: Long): TableEntry =
+    TableEntry("data", CompactionRunner.canonPath(p), seq, "parquet", Nil,
+      stats = footerStats(m), recordCount = m.rows, sizeBytes = m.bytes)
+
+  private def footerStats(m: CompactionRunner.FooterMetrics): Option[EntryStats] =
+    if (m.colMins.isEmpty && m.colMaxs.isEmpty && m.nullCounts.isEmpty) None
+    else Some(EntryStats(m.colMins, m.colMaxs, m.nullCounts))
 
   /** Pure append commit: write `df` as a fresh parquet generation and add
     * the files to the snapshot — Iceberg's `AppendFiles` fast path (no
@@ -2634,12 +2650,7 @@ final class GraftCatalog(root: String,
     else withTableLock(table) {
       val entries = loadEntries(table)
       val seq = entries.map(_.seqNum).foldLeft(0L)(math.max) + 1
-      val added = counted.map { case (p, rc, size) =>
-        TableEntry("data", CompactionRunner.canonPath(p),
-          seq, "parquet", Nil,
-          recordCount = rc,
-          sizeBytes = size)
-      }
+      val added = counted.map { case (p, m) => footerCountedEntry(p, m, seq) }
       val nextId = currentSnapshotId(table) + 1
       writeSnapshot(table, nextId, entries ++ added)
       carrySchema(table, nextId - 1, nextId)
@@ -2672,12 +2683,7 @@ final class GraftCatalog(root: String,
     val counted = countedParquetsIn(spark, dir)
     withTableLock(table) {
       val seq = loadEntries(table).map(_.seqNum).foldLeft(0L)(math.max) + 1
-      val added = counted.map { case (p, rc, size) =>
-        TableEntry("data", CompactionRunner.canonPath(p),
-          seq, "parquet", Nil,
-          recordCount = rc,
-          sizeBytes = size)
-      }
+      val added = counted.map { case (p, m) => footerCountedEntry(p, m, seq) }
       val nextId = currentSnapshotId(table) + 1
       writeSnapshot(table, nextId, added)
       carrySchema(table, nextId - 1, nextId)
@@ -2777,12 +2783,7 @@ final class GraftCatalog(root: String,
       else {
         val entries = loadEntries(table)
         val seq = entries.map(_.seqNum).foldLeft(0L)(math.max) + 1
-        val added = counted.map { case (p, rc, size) =>
-          TableEntry("data", CompactionRunner.canonPath(p),
-            seq, "parquet", Nil,
-            recordCount = rc,
-            sizeBytes = size)
-        }
+        val added = counted.map { case (p, m) => footerCountedEntry(p, m, seq) }
         val nextId = currentSnapshotId(table) + 1
         writeSnapshot(table, nextId, entries ++ added) // reserves nextId
         writeStreamMarks(table, marks + (queryId -> (batchId, nextId)))
@@ -2949,8 +2950,8 @@ final class GraftCatalog(root: String,
     val written = listParquetsIn(spark, delDir)
     // emptiness from the footers (driver-side); -1 (unreadable) counts as
     // non-empty so the conservative path commits, as the reader did
-    val empty = written.isEmpty || CompactionRunner.parquetFooterCountsBulk(
-      written, spark.sessionState.newHadoopConf()).forall(_._1 == 0L)
+    val empty = written.isEmpty || CompactionRunner.parquetFooterMetricsBulk(
+      written, spark.sessionState.newHadoopConf()).forall(_.rows == 0L)
     if (empty) currentSnapshotId(table)
     else withTableLock(table) {
       val entries = loadEntries(table)
@@ -3308,7 +3309,7 @@ final class GraftCatalog(root: String,
       if (files.isEmpty) 0L
       else {
         val footer =
-          CompactionRunner.parquetFooterCountsBulk(files, hconf).map(_._1)
+          CompactionRunner.parquetFooterMetricsBulk(files, hconf).map(_.rows)
         if (footer.forall(_ >= 0)) footer.sum
         else spark.read.parquet(files: _*).count()
       }
@@ -3691,11 +3692,13 @@ final class GraftCatalog(root: String,
     def dropHidden(df: DataFrame) =
       df.select(df.columns.filterNot(hidden.contains).map(col).toSeq: _*)
 
+    // each branch is built per footer-schema group: an inline union of the
+    // groups would put a UnionRDD under the branch, which the stream can
+    // only serve through an eager build and a full repartition
     val inserts =
-      if (newTasks.isEmpty) None
-      else Some(dropHidden(liveWithHidden(
-        CompactionRunner.scanWithHiddenCols(spark, newTasks, schema), toE))
-        .withColumn("_change_type", lit("I")))
+      if (newTasks.isEmpty) Nil
+      else CompactionRunner.scanWithHiddenColsGroups(spark, newTasks, schema).map(scan =>
+        dropHidden(liveWithHidden(scan, toE)).withColumn("_change_type", lit("I")))
     // the delete diff only needs the old files whose rows COULD have been
     // suppressed inside the window: files REMOVED by it (metadata drops —
     // every from-live row reports 'D') plus files REFERENCED by the
@@ -3773,15 +3776,14 @@ final class GraftCatalog(root: String,
         })
     }
     val deletes =
-      if (oldForDiff.isEmpty) None
+      if (oldForDiff.isEmpty) Nil
       else {
         import org.apache.spark.sql.functions.{coalesce, max}
         val fp = graft.operators.MorPlanner.FilePathCol
         val pc = graft.operators.MorPlanner.PosCol
         val sq = graft.operators.MorPlanner.SeqNumCol
         def quoted(n: String) = "`" + n.replace("`", "``") + "`"
-        val scanOld = CompactionRunner.scanWithHiddenCols(spark, oldForDiff, schema)
-        val liveFrom = liveWithHidden(scanOld, fromE)
+        val scansOld = CompactionRunner.scanWithHiddenColsGroups(spark, oldForDiff, schema)
         // A from-live row is dead at `to` iff its FILE left the snapshot
         // (metadata drop — contributes no rows at `to`) or a delete entry
         // NEW in the window kills it: the window cannot rewrite data files
@@ -3816,103 +3818,103 @@ final class GraftCatalog(root: String,
           CompactionRunner.hintSmall(spark, df,
             entries.map(e => (e.path, e.sizeBytes)))
         val posMark = "_graft_cdc_posm"
-        val withPos = posPairs match {
-          case Some(pairs) if pairs.isEmpty =>
-            liveFrom.withColumn(posMark, lit(false))
+        // the new position pairs as a marker build side (None: no pair)
+        val posKeys: Option[DataFrame] = posPairs match {
+          case Some(pairs) if pairs.isEmpty => None
           case Some(pairs) =>
             // LocalRelation build side (driver-held pairs, provably under
             // the broadcast cap) — no distinct shuffle in the served plan
             import spark.implicits._
-            liveFrom.join(
-              org.apache.spark.sql.functions.broadcast(
-                pairs.toDF(fp, pc).withColumn(posMark, lit(true))),
-              Seq(fp, pc), "left_outer")
-              .withColumn(posMark, coalesce(col(posMark), lit(false)))
-          case None => CompactionRunner.readPositionDeletes(
-              spark, newPosTasks) match {
-            case None => liveFrom.withColumn(posMark, lit(false))
-            case Some(pd) =>
-              liveFrom.join(
-                hinted(pd.select(col(fp), col(pc)).distinct()
-                  .withColumn(posMark, lit(true)),
-                  newDeleteEntries.filter(_.kind == "posdel")),
-                Seq(fp, pc), "left_outer")
-                .withColumn(posMark, coalesce(col(posMark), lit(false)))
-          }
+            Some(org.apache.spark.sql.functions.broadcast(
+              pairs.toDF(fp, pc).withColumn(posMark, lit(true))))
+          case None => CompactionRunner.readPositionDeletes(spark, newPosTasks)
+            .map(pd => hinted(pd.select(col(fp), col(pc)).distinct()
+              .withColumn(posMark, lit(true)),
+              newDeleteEntries.filter(_.kind == "posdel")))
         }
+        // every group projects to the same canonical shape: the key sets
+        // resolve, and collect, once for all of them
         val eqGroups = CompactionRunner.readEqualityDeletes(
-          spark, eq(newDeleteEntries), Some(scanOld.schema))
-        val (marked, eqMarks) = eqGroups.zipWithIndex
-          .foldLeft((withPos, Seq.empty[String])) {
-            case ((df, marks), (g, i)) =>
-              val m = s"_graft_cdc_eqm$i"
-              // one row per key carrying the NEWEST delete sequence:
-              // `data.seq < max(del.seq)` is exactly "some delete in the
-              // group kills the row", and the distinct keys keep the
-              // outer join cardinality-preserving (no row duplication)
-              lazy val grouped = g.df
-                .groupBy(g.equalityCols.map(c => col(quoted(c))): _*)
-                .agg(max(col(sq)).as(sq))
-              // the windows already collected this group's distinct
-              // (keys, seq) rows — max-seq per key folds on the DRIVER
-              // when every key type carries value equality (a binary key
-              // is an Array ref compare; Float/Double ±0.0 split keys SQL
-              // `=` would merge — both fall back), so the common case
-              // reads the delete files ONCE per window and plans the
-              // marker with no collect job at all
-              val sharedKeys: Option[DataFrame] =
-                eqWindows.flatMap(_.lift(i)).collect {
-                  case w if w.equalityCols == g.equalityCols &&
-                      GraftCatalog.driverGroupSafe(w.schema) =>
-                    val k = w.schema.length - 1
-                    val folded = w.rows
-                      .groupBy(r => (0 until k).map(r.get).toVector)
-                      .map { case (key, rs) =>
-                        org.apache.spark.sql.Row.fromSeq(
-                          key :+ rs.map(_.getLong(k)).max)
-                      }.toArray
-                    org.apache.spark.sql.functions.broadcast(
-                      spark.createDataFrame(
-                        java.util.Arrays.asList(folded: _*), w.schema))
-                }
-              // no shared window (over-cap, null keys, ref-equality key
-              // types): key sets within the changelog cap collect
-              // driver-side and join as a LocalRelation build, keeping
-              // the D branch shuffle-free; over the cap, the distributed
-              // aggregate build stays
-              val cap = GraftCatalog.ChangelogEqKeyCap
-              val localKeys: Option[DataFrame] = sharedKeys.orElse {
-                try {
-                  val rs = grouped.limit(cap + 1).collect()
-                  if (rs.length > cap) None
-                  else Some(org.apache.spark.sql.functions.broadcast(
+          spark, eq(newDeleteEntries), Some(scansOld.head.schema))
+        val eqKeys: Seq[(Seq[String], DataFrame, String)] = eqGroups.zipWithIndex.map {
+          case (g, i) =>
+            val m = s"_graft_cdc_eqm$i"
+            // one row per key carrying the NEWEST delete sequence:
+            // `data.seq < max(del.seq)` is exactly "some delete in the
+            // group kills the row", and the distinct keys keep the
+            // outer join cardinality-preserving (no row duplication)
+            lazy val grouped = g.df
+              .groupBy(g.equalityCols.map(c => col(quoted(c))): _*)
+              .agg(max(col(sq)).as(sq))
+            // the windows already collected this group's distinct
+            // (keys, seq) rows — max-seq per key folds on the DRIVER
+            // when every key type carries value equality (a binary key
+            // is an Array ref compare; Float/Double ±0.0 split keys SQL
+            // `=` would merge — both fall back), so the common case
+            // reads the delete files ONCE per window and plans the
+            // marker with no collect job at all
+            val sharedKeys: Option[DataFrame] =
+              eqWindows.flatMap(_.lift(i)).collect {
+                case w if w.equalityCols == g.equalityCols &&
+                    GraftCatalog.driverGroupSafe(w.schema) =>
+                  val k = w.schema.length - 1
+                  val folded = w.rows
+                    .groupBy(r => (0 until k).map(r.get).toVector)
+                    .map { case (key, rs) =>
+                      org.apache.spark.sql.Row.fromSeq(
+                        key :+ rs.map(_.getLong(k)).max)
+                    }.toArray
+                  org.apache.spark.sql.functions.broadcast(
                     spark.createDataFrame(
-                      java.util.Arrays.asList(rs: _*), grouped.schema)))
-                } catch { case scala.util.control.NonFatal(_) => None }
+                      java.util.Arrays.asList(folded: _*), w.schema))
               }
-              val keys = localKeys
-                .getOrElse(hinted(grouped,
-                  newDeleteEntries.filter(_.kind == "eqdel")))
-                .withColumn(m, lit(true))
-              val d = df.as("graft_cdc_d")
-              val k = keys.as("graft_cdc_k")
-              val cond = g.equalityCols.map(c =>
-                  col(s"graft_cdc_d.${quoted(c)}") ===
-                    col(s"graft_cdc_k.${quoted(c)}")).reduce(_ && _) &&
-                (col(s"graft_cdc_d.$sq") < col(s"graft_cdc_k.$sq"))
-              val joined = d.join(k, cond, "left_outer")
-              val kept = df.columns.toSeq.map(c =>
-                col(s"graft_cdc_d.${quoted(c)}").as(c)) :+
-                coalesce(col(s"graft_cdc_k.$m"), lit(false)).as(m)
-              (joined.select(kept: _*), marks :+ m)
+            // no shared window (over-cap, null keys, ref-equality key
+            // types): key sets within the changelog cap collect
+            // driver-side and join as a LocalRelation build, keeping
+            // the D branch shuffle-free; over the cap, the distributed
+            // aggregate build stays
+            val cap = GraftCatalog.ChangelogEqKeyCap
+            val localKeys: Option[DataFrame] = sharedKeys.orElse {
+              try {
+                val rs = grouped.limit(cap + 1).collect()
+                if (rs.length > cap) None
+                else Some(org.apache.spark.sql.functions.broadcast(
+                  spark.createDataFrame(
+                    java.util.Arrays.asList(rs: _*), grouped.schema)))
+              } catch { case scala.util.control.NonFatal(_) => None }
+            }
+            val keys = localKeys
+              .getOrElse(hinted(grouped,
+                newDeleteEntries.filter(_.kind == "eqdel")))
+              .withColumn(m, lit(true))
+            (g.equalityCols, keys, m)
           }
-        val killed = (col(posMark) +: eqMarks.map(col))
-          .foldLeft(dropped)(_ || _)
-        Some(dropHidden(marked.filter(killed)
-          .drop((posMark +: eqMarks): _*))
-          .withColumn("_change_type", lit("D")))
+        val eqMarks = eqKeys.map(_._3)
+        scansOld.map { scanOld =>
+          val liveFrom = liveWithHidden(scanOld, fromE)
+          val withPos = posKeys.fold(liveFrom.withColumn(posMark, lit(false)))(keys =>
+            liveFrom.join(keys, Seq(fp, pc), "left_outer")
+              .withColumn(posMark, coalesce(col(posMark), lit(false))))
+          val marked = eqKeys.foldLeft(withPos) { case (df, (eqCols, keys, m)) =>
+            val d = df.as("graft_cdc_d")
+            val k = keys.as("graft_cdc_k")
+            val cond = eqCols.map(c =>
+                col(s"graft_cdc_d.${quoted(c)}") ===
+                  col(s"graft_cdc_k.${quoted(c)}")).reduce(_ && _) &&
+              (col(s"graft_cdc_d.$sq") < col(s"graft_cdc_k.$sq"))
+            val kept = df.columns.toSeq.map(c =>
+              col(s"graft_cdc_d.${quoted(c)}").as(c)) :+
+              coalesce(col(s"graft_cdc_k.$m"), lit(false)).as(m)
+            d.join(k, cond, "left_outer").select(kept: _*)
+          }
+          val killed = (col(posMark) +: eqMarks.map(col))
+            .foldLeft(dropped)(_ || _)
+          dropHidden(marked.filter(killed)
+            .drop((posMark +: eqMarks): _*))
+            .withColumn("_change_type", lit("D"))
+        }
       }
-    val parts = inserts.toSeq ++ deletes.toSeq
+    val parts = inserts ++ deletes
     if (parts.isEmpty)
       throw GraftError.Metadata(
         s"changelog of $table: neither snapshot has data files")
@@ -4334,6 +4336,13 @@ final class GraftCatalog(root: String,
     * so pruning survives later spec evolution. Files without recognizable
     * segments commit tuple-less and are simply never partition-pruned
     * (conservative, like every other pruning gap).
+    *
+    * A local parquet file committed without writer stats (an external
+    * writer's file, an upsert's) gets its counts, bounds and null counts
+    * from its footer ([[CompactionRunner.parquetFooterMetrics]]), so a
+    * read can prune it like a doorway-written one. Remote files keep what
+    * the caller passed: a commit opens no object-store file it was not
+    * asked to.
     */
   private def addedDataEntries(
       table: String,
@@ -4342,15 +4351,24 @@ final class GraftCatalog(root: String,
     val spec = partitionSpec(table)
     val names = spec.map(_.name)
     val specTransforms = spec.map(f => f.name -> s"${f.transform}|${f.source}").toMap
+    def statless(f: GraftCatalog.AddedFile) =
+      f.colMins.isEmpty && f.colMaxs.isEmpty && f.nullCounts.isEmpty
+    val unread = files.filter(f => statless(f) && f.format == "parquet" &&
+      Option(new org.apache.hadoop.fs.Path(f.path).toUri.getScheme).forall(_ == "file"))
+      .map(_.path)
+    val footers = unread.zip(CompactionRunner.parquetFooterMetricsBulk(
+      unread, CompactionRunner.defaultHadoopConf())).toMap
     files.map { f =>
       val vals = partitionValsFromPath(f.path, names)
+      val footer = footers.get(f.path).filter(_.rows >= 0)
       TableEntry("data", CompactionRunner.canonPath(f.path), seq, f.format, Nil,
         stats =
-          if (f.colMins.isEmpty && f.colMaxs.isEmpty && f.nullCounts.isEmpty) None
+          if (statless(f)) footer.flatMap(footerStats)
           else Some(EntryStats(f.colMins, f.colMaxs, f.nullCounts)),
         partitionVals = vals,
         partitionTransforms = specTransforms.view.filterKeys(vals.contains).toMap,
-        recordCount = f.recordCount, sizeBytes = f.sizeBytes)
+        recordCount = if (f.recordCount >= 0) f.recordCount else footer.fold(-1L)(_.rows),
+        sizeBytes = if (f.sizeBytes >= 0) f.sizeBytes else footer.fold(-1L)(_.bytes))
     }
   }
 
@@ -5026,7 +5044,7 @@ final class GraftCatalog(root: String,
     // scheme-aware IO (the data files may live on s3a/hdfs even though the
     // catalog metadata is local) — java.io.File would silently "delete"
     // nothing for any non-local candidate
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = CompactionRunner.defaultHadoopConf()
     orphanFiles(table, candidates).filter { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(conf)
@@ -5204,9 +5222,9 @@ final class GraftCatalog(root: String,
       val written = CompactionRunner.listParquet(dir)
       // an all-miss delete set writes an empty file; commit no entry for it
       // (footer row count, driver-side — was one Spark job per file)
-      val nonEmpty = written.zip(CompactionRunner.parquetFooterCountsBulk(
+      val nonEmpty = written.zip(CompactionRunner.parquetFooterMetricsBulk(
           written, spark.sessionState.newHadoopConf()))
-        .collect { case (p, (rows, _)) if rows != 0L => p }
+        .collect { case (p, m) if m.rows != 0L => p }
       withTableLock(table) {
         commitRewriteLocked(table,
           posDeleteEntries(spark, nonEmpty, maxEqSeq),
@@ -5265,9 +5283,9 @@ final class GraftCatalog(root: String,
       // early return can never retire it, and the zero-row posdel entry
       // disables the metadata COUNT(*) fast path forever
       val all = CompactionRunner.listParquet(dir)
-      val written = all.zip(CompactionRunner.parquetFooterCountsBulk(
+      val written = all.zip(CompactionRunner.parquetFooterMetricsBulk(
           all, spark.sessionState.newHadoopConf()))
-        .collect { case (p, (rows, _)) if rows != 0L => p }
+        .collect { case (p, m) if m.rows != 0L => p }
       withTableLock(table) {
         commitRewriteLocked(table,
           posDeleteEntries(spark, written, seq),

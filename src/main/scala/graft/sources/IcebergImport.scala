@@ -128,7 +128,7 @@ object IcebergImport {
   def read(
       metadataLocation: String,
       conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration()): TableMetadata = {
+        CompactionRunner.defaultHadoopConf()): TableMetadata = {
     val hp = new org.apache.hadoop.fs.Path(metadataLocation)
     val fs = hp.getFileSystem(conf)
     val len = fs.getFileStatus(hp).getLen

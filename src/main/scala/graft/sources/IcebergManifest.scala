@@ -352,7 +352,7 @@ object IcebergManifest {
       entries: Seq[ManifestEntry],
       schema: StructType,
       conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration(),
+        CompactionRunner.defaultHadoopConf(),
       partitionFields: Seq[PartitionFieldSpec] = Nil): Unit = {
     // SPEC-EXACT positional tuples when a partition spec is supplied and
     // every entry's every tuple value parses into its typed slot —
@@ -513,7 +513,7 @@ object IcebergManifest {
       path: String,
       schema: StructType,
       conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration(),
+        CompactionRunner.defaultHadoopConf(),
       inheritedSeq: Long = 0L): Seq[ManifestEntry] = {
     val idToName: Map[Int, String] =
       schema.fields.zipWithIndex.map { case (f, i) =>
@@ -620,7 +620,7 @@ object IcebergManifest {
       path: String,
       manifests: Seq[ManifestFile],
       conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration()): Unit = {
+        CompactionRunner.defaultHadoopConf()): Unit = {
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](ListSchema))
     val hp = new org.apache.hadoop.fs.Path(path)
     w.create(ListSchema, hp.getFileSystem(conf).create(hp, true))
@@ -651,7 +651,7 @@ object IcebergManifest {
   def readList(
       path: String,
       conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration()): Seq[ManifestFile] = {
+        CompactionRunner.defaultHadoopConf()): Seq[ManifestFile] = {
     val r = openReader(path, conf)
     try r.iterator().asScala.map { rec =>
       def intOr(n: String, v1Name: String, d: Int): Int =

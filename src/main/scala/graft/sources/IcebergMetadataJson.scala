@@ -260,7 +260,7 @@ object IcebergMetadataJson {
     // adopted by-reference sketch) SKIPS its entry rather than failing
     // the export: statistics are planner estimates, never a correctness
     // input, and exportOnLoad must keep serving the table.
-    val statsConf = new org.apache.hadoop.conf.Configuration()
+    val statsConf = CompactionRunner.defaultHadoopConf()
     val statsEntries = catalog.statisticsFiles(table)
       .filter(r => retained(r.snapshotId))
       .flatMap { r =>
@@ -349,7 +349,7 @@ object IcebergMetadataJson {
       schemas: Seq[(Long, StructType)])
       : (Map[Long, String], Map[Long, Long], Boolean, Long) = {
     import graft.sources.IcebergManifest.{ManifestEntry, ManifestFile}
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = CompactionRunner.defaultHadoopConf()
     // blob metadata per Puffin sidecar, memoized (snapshots share files).
     // None = provably NOT Puffin (the legacy GDV1 encoding — exports as a
     // plain content-1 entry without reference fields). IO/parse errors

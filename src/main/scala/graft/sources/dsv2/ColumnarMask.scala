@@ -1,7 +1,7 @@
 package graft.sources.dsv2
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
@@ -27,7 +27,7 @@ import scala.collection.immutable.ArraySeq
   *  - EQUALITY deletes — the continuously-upserted CDC shape, the
   *    reference's most elaborate path (`datafusion_processor.rs:281-304`)
   *    — mask by a broadcast hash probe on the key columns with the
-  *    `data.seq < delete.seq` guard: the driver collects the
+  *    `data.seq < delete.seq` guard: the driver decodes the
   *    manifest-bounded key set as `key tuple → max delete seq`, and a row
   *    is masked iff its key probes a set whose max seq exceeds the row's
   *    file seq. Files as new as every delete skip the probe entirely
@@ -72,6 +72,9 @@ object GraftColumnarMask {
     */
   val maskedEqServed = new java.util.concurrent.atomic.AtomicLong
 
+  /** Diagnostics for tests: delete files decoded (parquet and DV). */
+  val deleteFilesDecoded = new java.util.concurrent.atomic.AtomicLong
+
   /** Probe hook ONLY ([[graft.ScalingProbe]]): forces the row-path
     * fallback so the masked and row dispositions of the same read can be
     * measured against each other. Part of the scan-state cache key, so
@@ -112,32 +115,8 @@ object GraftColumnarMask {
     * on BOTH probe sides or a -0.0 delete key would silently fail to
     * mask a 0.0 row the anti join drops.
     */
-  private def normFloating(d: Double): java.lang.Double =
+  private[dsv2] def normFloating(d: Double): java.lang.Double =
     java.lang.Double.valueOf(if (d == 0.0d) 0.0d else d)
-
-  private def normDriver(v: Any): Option[Any] = v match {
-    case null => Some(null)
-    case b: java.lang.Byte => Some(java.lang.Long.valueOf(b.longValue))
-    case s: java.lang.Short => Some(java.lang.Long.valueOf(s.longValue))
-    case i: java.lang.Integer => Some(java.lang.Long.valueOf(i.longValue))
-    case l: java.lang.Long => Some(l)
-    case f: java.lang.Float => Some(normFloating(f.doubleValue))
-    case d: java.lang.Double => Some(normFloating(d.doubleValue))
-    case s: String => Some(s)
-    case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-    case b: java.lang.Boolean => Some(b)
-    case d: java.sql.Date => Some(java.lang.Long.valueOf(d.toLocalDate.toEpochDay))
-    case d: java.time.LocalDate => Some(java.lang.Long.valueOf(d.toEpochDay))
-    // timestamps → the micros-since-epoch long the vectors store; the
-    // catalyst conversions are the exact inverses of the collect() path
-    case t: java.sql.Timestamp => Some(java.lang.Long.valueOf(
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)))
-    case i: java.time.Instant => Some(java.lang.Long.valueOf(
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(i)))
-    case l: java.time.LocalDateTime => Some(java.lang.Long.valueOf(
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.localDateTimeToMicros(l)))
-    case _ => None
-  }
 
   /** One resolved equality-delete key set: the CURRENT-schema key column
     * names, and the merged `key tuple → max delete sequence` probe map
@@ -272,15 +251,17 @@ object GraftColumnarMask {
     * ([[NoPieces]] for a build from nothing — the same function), in three
     * steps:
     *  1. decode each delete file `prev` did not decode, keyed by canonical
-    *     path (position parquet files in one job, deletion vectors on the
-    *     driver, equality files in one job per key signature);
+    *     path, on the driver with no Spark job ([[DeleteFileDecoder]]
+    *     for parquet files; deletion vectors as they are);
     *  2. plan each footer-schema group whose file set `prev` did not plan
     *     (so the layout is always exactly what a build from nothing plans);
     *  3. merge on the driver — per-key max seqs, sorted positions and the
     *     per-file seqs of the CURRENT entries — into one new broadcast, and
     *     re-wrap the mask over the raw scans.
-    * A read right after an append therefore runs no job here, and one
-    * right after an upsert reads only the new equality-delete file.
+    * A read right after an append or an upsert therefore runs no job
+    * here; the latter decodes only the new equality-delete file. (A
+    * footer-digest pass over more than 64 new files, and the first
+    * schema inference of a footer schema never seen before, still do.)
     */
   private[dsv2] def plan(
       spark: SparkSession,
@@ -344,7 +325,7 @@ object GraftColumnarMask {
     val typedSets: Seq[EqSet] =
       eqSets.map(s => s.copy(types = s.cols.map(typeByName)))
     if (!typedSets.forall(_.types.forall(probeable))) return None
-    // the DRIVER-collected key values must have normalized to exactly the
+    // the DRIVER-decoded key values must have normalized to exactly the
     // class the executor-side probe produces for the SCANNED column type.
     // A delete file whose key column diverges in type FAMILY (double keys
     // against a long data column, say) must refuse to the row path —
@@ -366,7 +347,7 @@ object GraftColumnarMask {
         }))) return None
     val eqProbe: Seq[EqSet] = typedSets.map { typed =>
       // single integral key (the CDC PK shape): sorted parallel arrays
-      // for the allocation-free per-row probe. normDriver boxed every
+      // for the allocation-free per-row probe. The decoder boxed every
       // integral/date key value as java.lang.Long (validated above), so
       // the map's keys unbox directly.
       val integral = typed.types match {
@@ -525,12 +506,28 @@ object GraftColumnarMask {
       .groupMap(r => CompactionRunner.canonKey(CompactionRunner.canonPath(r._1)))(_._2)
       .map { case (f, ps) => f -> ps.toArray }
 
+  /** Each of `paths` read by [[DeleteFileDecoder]] on the bounded footer
+    * pool, several files at a time; None when any refuses.
+    */
+  private def decodeFiles(
+      spark: SparkSession,
+      paths: Seq[String],
+      columnsOf: String => Seq[(String, DataType)]): Option[Map[String, Array[Array[Any]]]] = {
+    if (paths.isEmpty) return Some(Map.empty)
+    val conf = spark.sessionState.newHadoopConf()
+    val settings = DeleteFileDecoder.Settings.of(spark)
+    val decoded = CompactionRunner.onFooterPool(paths)(p =>
+      DeleteFileDecoder.read(p, columnsOf(p), conf, settings))
+    deleteFilesDecoded.addAndGet(paths.size)
+    if (decoded.forall(_.isDefined)) Some(paths.zip(decoded.flatten).toMap) else None
+  }
+
   /** The position-delete files of `pos` decoded, keyed by canonKey: those
-    * in `known` as they are, the rest read — deletion-vector sidecars ARE
-    * the decoded structure on disk and decode on the driver; parquet row
-    * files collect through one scan, attributed to their file by
-    * `_metadata.file_path`. None when a collected row names no requested
-    * file (a canonicalization divergence: unprovable, the row path serves).
+    * in `known` as they are, the rest read on the driver — deletion-vector
+    * sidecars ARE the decoded structure on disk, parquet files decode
+    * their `(file_path, pos)` columns ([[decodeFiles]]). None when a file
+    * refuses (a null position or path included: unprovable, the row path
+    * serves).
     */
   private def decodePos(
       spark: SparkSession,
@@ -544,30 +541,34 @@ object GraftColumnarMask {
     val (dvs, pqs) = fresh.partition(_._2.format == "dv")
     lazy val conf = spark.sessionState.newHadoopConf()
     val fromDv = dvs.map { case (k, e) =>
+      deleteFilesDecoded.incrementAndGet()
       k -> byDataFile(graft.sources.DeletionVectors.read(e.path, conf).iterator
         .flatMap { case (f, ps) => ps.iterator.map(f -> _) })
     }
-    val fromPq: Map[String, Map[String, Array[Long]]] =
-      if (pqs.isEmpty) Map.empty
-      else {
-        val rows = CompactionRunner.inferredParquet(spark, pqs.values.map(_.path).toSeq)
-          .select(col("_metadata.file_path"), col("file_path"), col("pos"))
-          .collect()
-          .groupBy(r => CompactionRunner.canonDecoded(r.getString(0)))
-        if (!rows.keysIterator.forall(pqs.contains)) return None
-        pqs.map { case (k, _) =>
-          k -> byDataFile(rows.getOrElse(k, Array.empty).iterator
-            .map(r => (r.getString(1), r.getLong(2))))
-        }
-      }
+    val pqPaths = pqs.values.map(_.path).toSeq
+    val rows = decodeFiles(spark, pqPaths, _ => DeleteFileDecoder.PosColumns)
+      .getOrElse(return None)
+    if (!rows.valuesIterator.forall(_.forall(r => r(0) != null && r(1) != null))) return None
+    val fromPq = pqs.map { case (k, e) =>
+      k -> byDataFile(rows(e.path).iterator.map(r =>
+        (r(0).asInstanceOf[String], r(1).asInstanceOf[java.lang.Long].longValue)))
+    }
     Some(wanted.map { case (k, _) =>
       k -> known.getOrElse(k, fromDv.getOrElse(k, fromPq(k)))
     })
   }
 
   /** The equality-delete files of `eqEntries` decoded, keyed by canonKey:
-    * those in `known` as they are, the rest read in one job per key
-    * signature (see [[decodeEqFiles]]). None when any refuses provability.
+    * those in `known` as they are, the rest read on the driver
+    * ([[decodeFiles]]), each projecting only its key columns. Each file's
+    * key columns resolve against its own footer schema
+    * ([[CompactionRunner.schemaGroups]]) by the SAME resolution the row
+    * path applies ([[FieldIds.resolveEqColumns]], one shared
+    * implementation): ids bind to footer columns, names fall back. None
+    * when anything refuses provability: a key-less entry, unresolvable
+    * key ids, a column the decoder cannot read exactly. Null keys are fine
+    * (a null key value matches nothing under SQL equality, so such rows
+    * are simply dropped).
     */
   private def decodeEq(
       spark: SparkSession,
@@ -576,79 +577,34 @@ object GraftColumnarMask {
       known: Map[String, EqRows]): Option[Map[String, EqRows]] = {
     val wanted = eqEntries.map(e => CompactionRunner.canonKey(e.path) -> e).toMap
     val fresh = wanted.filter { case (k, _) => !known.contains(k) }.values.toSeq
-    val read = fresh.groupBy(e => (e.eqCols, e.eqIds)).toSeq.map {
-      case ((eqCols, eqIds), es) =>
-        decodeEqFiles(spark, es.map(_.path), eqCols, eqIds, canonical)
-    }
-    if (!read.forall(_.isDefined)) None
-    else {
-      val fromFiles = read.flatten.flatten.toMap
-      Some(wanted.map { case (k, _) => k -> known.getOrElse(k, fromFiles(k)) })
-    }
-  }
-
-  /** Read equality-delete files sharing one key signature in one job and
-    * decode each file's key tuples. None when anything refuses
-    * provability: a key-less signature, unresolvable key ids, a value that
-    * does not normalize, a row attributed to no requested file. Nulls are
-    * fine (a null key value matches nothing — SQL equality — so such rows
-    * are simply dropped).
-    */
-  private def decodeEqFiles(
-      spark: SparkSession,
-      paths: Seq[String],
-      eqCols: Seq[String],
-      eqIds: Seq[Int],
-      canonical: Option[StructType]): Option[Seq[(String, EqRows)]] = {
-    // a key-less eq-delete entry is corrupt metadata: an EMPTY key tuple
-    // would match every older row here while the row path fails loudly
-    // — refuse so the row path's named error surfaces instead of the
-    // two serving paths diverging on the same snapshot
-    if (eqCols.isEmpty && eqIds.isEmpty) return None
-    val raw = CompactionRunner.inferredParquet(spark, paths)
-    // (delete-file column, data-side name) — the SAME resolution the
-    // row path applies ([[FieldIds.resolveEqColumns]], one shared
-    // implementation): ids bind to footer columns, names fall back
-    FieldIds.resolveEqColumns(raw.schema, eqCols, eqIds, canonical).flatMap { rs =>
-      val delCols = rs.map(_._1)
-      if (!delCols.forall(raw.schema.fieldNames.contains)) None
-      else {
-        // keyed canonKey like the pos-delete maps: the scanned rendering
-        // decodes into the same literal-normalized domain (an eq-delete
-        // FILE under a spacey path would otherwise refuse the whole set
-        // and silently degrade every read to the row-path join)
-        val byFile = paths.map(p => CompactionRunner.canonKey(p) ->
-          scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]).toMap
-        var bad = false
-        raw.select(delCols.map(col) :+ col("_metadata.file_path"): _*)
-          .collect()
-          .foreach { r =>
-            // a delete row whose _metadata.file_path matches no entry's
-            // canonical path is UNPROVABLE (a canonicalization divergence
-            // — URI scheme, symlink — between the entry list and the
-            // scan): its sequence number is unknown, so the whole set
-            // refuses back to the row-based anti join
-            val buf = byFile.getOrElse(
-              CompactionRunner.canonDecoded(r.getString(delCols.length)),
-              { bad = true; null })
-            val vals = new Array[Any](delCols.length)
-            var i = 0
-            var anyNull = false
-            while (i < delCols.length && !bad) {
-              normDriver(r.get(i)) match {
-                case Some(null) => anyNull = true
-                case Some(v) => vals(i) = v
-                case None => bad = true
-              }
-              i += 1
-            }
-            // null key values match nothing under SQL equality
-            if (!bad && !anyNull) buf += ArraySeq.unsafeWrapArray(vals)
-          }
-        if (bad) None
-        else Some(byFile.toSeq.map { case (k, b) => k -> EqRows(rs.map(_._2), b.toArray) })
+    val schemaOf: Map[String, StructType] =
+      if (fresh.isEmpty) Map.empty
+      else CompactionRunner.schemaGroups(spark, fresh.map(_.path))
+        .flatMap { case (schema, paths) => paths.map(_ -> schema) }.toMap
+    // (key columns as the session reads them, current-schema names) per path
+    val keysOf: Map[String, (Seq[(String, DataType)], Seq[String])] = fresh.map { e =>
+      // a key-less eq-delete entry is corrupt metadata: an EMPTY key tuple
+      // would match every older row here while the row path fails loudly
+      // — refuse so the row path's named error surfaces instead of the
+      // two serving paths diverging on the same snapshot
+      if (e.eqCols.isEmpty && e.eqIds.isEmpty) return None
+      val schema = schemaOf(e.path)
+      val rs = FieldIds.resolveEqColumns(schema, e.eqCols, e.eqIds, canonical)
+        .getOrElse(return None)
+      val cols = rs.map { case (delCol, _) =>
+        delCol -> schema.fields.find(_.name == delCol).getOrElse(return None).dataType
       }
-    }
+      e.path -> (cols, rs.map(_._2))
+    }.toMap
+    val rows = decodeFiles(spark, fresh.map(_.path), keysOf(_)._1).getOrElse(return None)
+    val fromFiles = fresh.map { e =>
+      // null key values match nothing under SQL equality
+      val keys = rows(e.path).collect {
+        case r if !r.contains(null) => ArraySeq.unsafeWrapArray(r): Seq[Any]
+      }
+      CompactionRunner.canonKey(e.path) -> EqRows(keysOf(e.path)._2, keys)
+    }.toMap
+    Some(wanted.map { case (k, _) => k -> known.getOrElse(k, fromFiles(k)) })
   }
 
   /** Position-only keep vector via the two-pointer sweep (row indices and

@@ -103,7 +103,7 @@ final class RestCatalogServer(
     // the FileSystem conf register-table walks foreign chains with — a
     // metadata-location on s3://wasb://gs:// needs the FileIO mappings
     hadoopConf: org.apache.hadoop.conf.Configuration =
-      new org.apache.hadoop.conf.Configuration()) {
+      graft.sources.CompactionRunner.defaultHadoopConf()) {
 
   import RestCatalogServer._
 
@@ -195,7 +195,7 @@ object RestCatalogServer {
       body: String = "",
       exportOnLoad: Boolean = false,
       hadoopConf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration()): (HttpResponseStatus, String) = {
+        graft.sources.CompactionRunner.defaultHadoopConf()): (HttpResponseStatus, String) = {
     val path = uri.takeWhile(_ != '?')
     // percent-decode ONLY: URLDecoder is form decoding, where '+' means
     // space — but '+' is a legal literal path character (RFC 3986), so a

@@ -78,11 +78,13 @@ class BloomSkipSpec extends SparkSpec {
     cat.recordBloomFilter(spark, "t", "key",
       expectedItemsPerFile = 1000L, fpp = 0.001)
 
-    // new generation the sidecar has never seen
+    // new generation the sidecar has never seen, interleaved like the
+    // fixture's (ids 5000..5099: its footer bounds straddle every probe,
+    // so only the bloom could prune it)
     val out = s"$base/append-out"
     cat.appendFiles(spark, "t",
-      Seq(5000L).toDF("id")
-        .select(col("id"), md5(col("id").cast("string")).as("key")),
+      (5000L until 5100L).toDF("id")
+        .select(col("id"), md5(col("id").cast("string")).as("key")).coalesce(1),
       out)
 
     // probe for the appended row: its file has no sidecar entry, so it is

@@ -64,13 +64,14 @@ class BroadcastSizeSpec extends SparkSpec {
 
   test("unknown file sizes fall back to the conservative default") {
     val (cat, root) = freshTable(10)
-    // commit a real data file through the REST-style append, which records
-    // no size (-1 = unknown)
+    // commit a real data file through the REST-style append with no size,
+    // its footer unreadable at commit (-1 = unknown)
     (11L to 20L).map(k => (k, s"v$k")).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/ext")
-    cat.commitAppendAt("t", cat.currentSnapshotId("t"),
-      CompactionRunner.listParquet(s"$root/ext")
-        .map(p => GraftCatalog.AddedFile(p, "parquet", -1L, -1L)))
+    UncountedCommit(CompactionRunner.listParquet(s"$root/ext")
+        .map(p => GraftCatalog.AddedFile(p, "parquet", -1L, -1L)))(
+      cat.commitAppendAt("t", cat.currentSnapshotId("t"), _))
+    assert(cat.loadEntries("t").exists(_.sizeBytes < 0))
     val rel = new GraftRelation(spark.sqlContext, root, "t")
     // one unknown size poisons the estimate: never risk a mis-broadcast
     assert(rel.sizeInBytes > 10L * 1024 * 1024 * 1024)

@@ -260,4 +260,55 @@ class ChangelogSpec extends SparkSpec {
     assert(rows(cat.changelog(spark, "t", s1, s2)) == Set((1L, "v1", "D")))
     assert(rows(cat.changelog(spark, "t", s3, s4)) == Set((2L, "v2", "D")))
   }
+
+  test("a window over two footer-schema groups serves each branch per group, shuffle-free") {
+    // doorway files (field ids) and an external plain-Spark file (none)
+    // are two footer-schema groups; the window adds to both and deletes
+    // from both
+    val root = Files.createTempDirectory("graft-cdc-groups").toString
+    val g = s"gcg_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    spark.conf.set(s"spark.sql.catalog.$g", "graft.sources.dsv2.GraftSparkCatalog")
+    spark.conf.set(s"spark.sql.catalog.$g.root", root)
+    val cat = new GraftCatalog(root)
+    spark.sql(s"CREATE TABLE $g.t (k BIGINT, v STRING)")
+    spark.sql(s"INSERT INTO $g.t SELECT id, concat('v', id) FROM range(0, 100)")
+    def external(lo: Long, hi: Long, tag: String): Unit = {
+      val dir = s"$root/external/$tag"
+      spark.range(lo, hi).selectExpr("id AS k", s"concat('$tag', id) AS v")
+        .coalesce(1).write.parquet(dir)
+      cat.commitAppend("t", CompactionRunner.listParquet(dir).map(GraftCatalog.AddedFile(_)))
+    }
+    external(100, 150, "a")
+    val s1 = cat.currentSnapshotId("t")
+    external(150, 160, "b")
+    cat.upsert(spark, "t", Seq((5L, "u5"), (120L, "u120"), (170L, "u170")).toDF("k", "v"),
+      Seq("k"), s"$root/_data/t/u1")
+    cat.deleteWhere(spark, "t", col("k") === 7L || col("k") === 130L, s"$root/_data/t/d1")
+    val s2 = cat.currentSnapshotId("t")
+    val parts = cat.changelogParts(spark, "t", s1, s2)
+    def branches(tag: String) = parts.count(_.filter(col("_change_type") === tag)
+      .limit(1).count() == 1)
+    assert(branches("I") >= 2 && branches("D") >= 2,
+      s"each branch must span both groups, got ${parts.size} parts")
+    def shuffleFree(r: org.apache.spark.rdd.RDD[_]): Boolean = r match {
+      case _: org.apache.spark.rdd.UnionRDD[_] => false
+      case _ => r.dependencies.forall {
+        case _: org.apache.spark.ShuffleDependency[_, _, _] => false
+        case d => shuffleFree(d.rdd)
+      }
+    }
+    parts.foreach { p =>
+      assert(shuffleFree(org.apache.spark.sql.graftbridge.DatasetBridge.internalRowRddNoAqe(p)),
+        s"a per-group branch must serve without a shuffle:\n${p.queryExecution.executedPlan}")
+    }
+    // the rows are the snapshots' difference
+    def at(s: Long): Set[(Long, String)] = spark.sql(s"SELECT k, v FROM $g.t VERSION AS OF $s")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val (before, after) = (at(s1), at(s2))
+    val expected = (before -- after).map { case (k, v) => (k, v, "D") } ++
+      (after -- before).map { case (k, v) => (k, v, "I") }
+    assert(parts.map(rows).reduce(_ ++ _) == expected)
+    assert(rows(cat.changelog(spark, "t", s1, s2)) == expected)
+    assert(expected.size == 10 + 3 + 2 + 2)
+  }
 }

@@ -33,7 +33,7 @@ class FooterPoolSpec extends SparkSpec {
     val files = writeFiles(8)
     assert(files.size == 8)
     val conf = spark.sessionState.newHadoopConf()
-    val serial = files.map(CompactionRunner.parquetFooterCounts(_, conf))
+    val serial = files.map(CompactionRunner.parquetFooterMetrics(_, conf))
     val jobs = new AtomicInteger()
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -41,16 +41,16 @@ class FooterPoolSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(l)
     val bulk =
-      try CompactionRunner.parquetFooterCountsBulk(files, conf)
+      try CompactionRunner.parquetFooterMetricsBulk(files, conf)
       finally spark.sparkContext.removeSparkListener(l)
     assert(bulk == serial, s"bulk must equal the per-file reads: $bulk vs $serial")
-    assert(bulk.map(_._1).sum == (1 to 8).map(_ * 10L).sum,
+    assert(bulk.map(_.rows).sum == (1 to 8).map(_ * 10L).sum,
       "row counts must be exact")
     assert(jobs.get() == 0, s"footer reads are driver-side, got ${jobs.get()} jobs")
-    // unreadable path posture unchanged: (-1, -1), not an exception
-    val withBad = CompactionRunner.parquetFooterCountsBulk(
+    // unreadable path posture unchanged: unknown counts, not an exception
+    val withBad = CompactionRunner.parquetFooterMetricsBulk(
       files.take(2) :+ s"${files.head}.does-not-exist", conf)
-    assert(withBad.take(2) == serial.take(2) && withBad.last == ((-1L, -1L)))
+    assert(withBad.take(2) == serial.take(2) && withBad.last == CompactionRunner.FooterMetrics.Unreadable)
   }
 
   test("footer reads overlap: 4 reads in flight at once (serial would deadlock)") {
@@ -63,8 +63,8 @@ class FooterPoolSpec extends SparkSpec {
     CompactionRunner.footerReadProbe =
       _ => barrier.await(30, TimeUnit.SECONDS)
     try {
-      val bulk = CompactionRunner.parquetFooterCountsBulk(files, conf)
-      assert(bulk.size == 8 && bulk.forall(_._1 > 0))
+      val bulk = CompactionRunner.parquetFooterMetricsBulk(files, conf)
+      assert(bulk.size == 8 && bulk.forall(_.rows > 0))
     } finally CompactionRunner.footerReadProbe = _ => ()
   }
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions.col
   * (`files`), partition totals (`partitions`), the snapshot chain
   * (`snapshots`/`history`). The core invariant under test: the metadata's
   * record counts equal what scanning the data actually returns, including
-  * across commits that mix counted (compaction) and uncounted (upsert)
-  * file generations.
+  * across commits that mix counted (compaction) and uncounted (a footer
+  * unreadable at commit) file generations.
   */
 class MetadataTablesSpec extends SparkSpec {
 
@@ -71,15 +71,17 @@ class MetadataTablesSpec extends SparkSpec {
     val cat = newCatalog()
     seedTable(cat, partitioned = false)
 
-    // upsert commits data files without counting them (-1 in the entry)
-    cat.upsert(spark, "t",
-      Seq((1000L, "g0", "fresh")).toDF("k", "g", "v"), Seq("k"),
-      s"${Files.createTempDirectory("graft-meta-up")}")
+    // a file whose footer was unreadable at commit is committed without
+    // counts (-1 in the entry)
+    val ext = s"${Files.createTempDirectory("graft-meta-up")}/ext"
+    Seq((1000L, "g0", "fresh")).toDF("k", "g", "v").coalesce(1).write.parquet(ext)
+    UncountedCommit(CompactionRunner.listParquet(ext).map(GraftCatalog.AddedFile(_)))(
+      cat.commitAppend("t", _))
 
     val files = cat.metadataTable(spark, "t", "files")
       .filter(col("content") === "data").collect()
     assert(files.exists(r => r.isNullAt(r.fieldIndex("record_count"))),
-      "the upsert generation must be uncounted")
+      "the appended generation must be uncounted")
     assert(files.exists(r => !r.isNullAt(r.fieldIndex("record_count"))),
       "the compacted generation must stay counted")
 

@@ -162,13 +162,18 @@ class GraftBatchServingSpec extends SparkSpec {
       assert(df.count() == 900L)
       jobs
     }
-    // the first read builds the snapshot's state: reading the delete set
-    // is a planning job
-    assert(planJobs(s"SELECT k, v FROM $g.t") >= 1)
+    // the first read builds the snapshot's state: it decodes the delete
+    // set (on the driver, no planning job)
+    val posFiles = new GraftCatalog(root).loadEntries("t").count(_.kind == "posdel")
+    val decoded0 = GraftColumnarMask.deleteFilesDecoded.get()
+    assert(planJobs(s"SELECT k, v FROM $g.t") == 0)
+    assert(posFiles > 0 && GraftColumnarMask.deleteFilesDecoded.get() - decoded0 == posFiles)
     val s1 = snap
-    // the identical re-read plans from the state: no job before execution
+    // the identical re-read plans from the state: no job, no decode
     assert(planJobs(s"SELECT k, v FROM $g.t") == 0,
       "a repeat read of an unchanged snapshot must reuse its scan state")
+    assert(GraftColumnarMask.deleteFilesDecoded.get() - decoded0 == posFiles,
+      "a repeat read of an unchanged snapshot must reuse its decoded deletes")
     // a commit changes the snapshot id — the state misses, fresh rows serve
     spark.sql(s"INSERT INTO $g.t SELECT id, concat('w', id) FROM range(1000, 1100)")
     assert(snap > s1)

@@ -78,11 +78,16 @@ class GraftScanStateSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-state-point").toString
     val g = mount(root)
     morTable(g)
-    assert(new GraftCatalog(root).loadEntries("t").exists(_.kind == "posdel"))
-    // the first read builds the state: the delete set's read is a job
+    val posFiles = new GraftCatalog(root).loadEntries("t").count(_.kind == "posdel")
+    assert(posFiles > 0)
+    // the first read builds the state: the position-delete files decode
+    // on the driver, without a Spark job
+    val decoded0 = GraftColumnarMask.deleteFilesDecoded.get()
     val (missPlan, _, first) = planThenRun(s"SELECT k, v FROM $g.t WHERE k = 3")
     assert(first == Seq(3L -> "v3"))
-    assert(missPlan >= 1, "building the state reads the position-delete set")
+    assert(GraftColumnarMask.deleteFilesDecoded.get() - decoded0 == posFiles,
+      "building the state decodes the position-delete files")
+    assert(missPlan == 0, s"the delete file decodes with no Spark job, ran $missPlan")
     Seq(11L, 250L, 777L, 950L).foreach { k =>
       val (planJobs, runJobs, rows) =
         planThenRun(s"SELECT k, v FROM $g.t WHERE k = $k")
@@ -90,6 +95,8 @@ class GraftScanStateSpec extends SparkSpec {
       assert(runJobs == 1, s"k = $k: the read itself is exactly one job, ran $runJobs")
       assert(rows == (if (k >= 900) Nil else Seq(k -> s"v$k")))
     }
+    assert(GraftColumnarMask.deleteFilesDecoded.get() - decoded0 == posFiles,
+      "a state hit decodes nothing")
     // ranges and IN lists prune through the same state
     val (rangePlan, _, range) = planThenRun(
       s"SELECT k, v FROM $g.t WHERE k BETWEEN 880 AND 920")

@@ -3,6 +3,7 @@ package graft.sources.dsv2
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.sources.UncountedCommit
 import graft.sources.GraftCatalog
 import org.apache.spark.sql.sources
 
@@ -77,7 +78,7 @@ class StatsPlanningSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE $g.t2 (k BIGINT, seg STRING) PARTITIONED BY (seg)")
     val files = cat.loadEntries("t1").filter(_.kind == "data").map(e =>
       GraftCatalog.AddedFile(e.path)) // recordCount/sizeBytes = -1: unknown
-    cat.commitAppend("t2", files)
+    UncountedCommit(files)(cat.commitAppend("t2", _))
     // without the rollup the estimate is POISONED (the old conservative
     // behavior — never mis-broadcast an unbounded table)
     val blind = estimate(root, "t2", Array.empty)
@@ -108,8 +109,8 @@ class StatsPlanningSpec extends SparkSpec {
     spark.range(50).selectExpr("id AS k").coalesce(1)
       .write.mode("overwrite").parquet(staged.toString)
     val p = graft.sources.CompactionRunner.listParquet(staged.toString).head
-    cat.commitAppend("u", Seq(GraftCatalog.AddedFile(p,
-      sizeBytes = java.nio.file.Files.size(java.nio.file.Paths.get(p)))))
+    UncountedCommit(Seq(GraftCatalog.AddedFile(p,
+      sizeBytes = java.nio.file.Files.size(java.nio.file.Paths.get(p)))))(cat.commitAppend("u", _))
     val st = estimate(root, "u", Array.empty)
     assert(st.sizeInBytes().isPresent && st.sizeInBytes().getAsLong > 0,
       "known sizes must keep serving when only counts are unknown")
@@ -121,7 +122,7 @@ class StatsPlanningSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $g.z SELECT id, 's0' FROM range(0, 100)")
     val zfiles = cat.loadEntries("z").filter(_.kind == "data").map(_.path)
     spark.sql(s"CREATE TABLE $g.z2 (k BIGINT, seg STRING) PARTITIONED BY (seg)")
-    cat.commitAppend("z2", zfiles.map(GraftCatalog.AddedFile(_)))
+    UncountedCommit(zfiles.map(GraftCatalog.AddedFile(_)))(cat.commitAppend("z2", _))
     spark.sql(s"CALL $g.system.compute_table_stats('z2')").collect()
     val z2 = estimate(root, "z2", Array.empty)
     assert(!z2.numRows().isPresent && !z2.sizeInBytes().isPresent,
@@ -146,7 +147,7 @@ class StatsPlanningSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE $g.td (k BIGINT, d DATE) PARTITIONED BY (d)")
     val files = cat.loadEntries("t1").filter(_.kind == "data").map(e =>
       GraftCatalog.AddedFile(e.path)) // recordCount/sizeBytes = -1: unknown
-    cat.commitAppend("td", files)
+    UncountedCommit(files)(cat.commitAppend("td", _))
     assert(cat.loadEntries("td").exists(e =>
       e.recordCount < 0 && e.partitionVals.get("d").contains("2024-01-01")),
       cat.loadEntries("td").map(e => (e.path, e.partitionVals)).toString)
@@ -169,8 +170,8 @@ class StatsPlanningSpec extends SparkSpec {
     val cat = new GraftCatalog(root)
     val pref = cat.partitionStatistics("t1").get
     spark.sql(s"CREATE TABLE $g.t2 (k BIGINT, seg STRING) PARTITIONED BY (seg)")
-    cat.commitAppend("t2", cat.loadEntries("t1").filter(_.kind == "data")
-      .map(e => GraftCatalog.AddedFile(e.path)))
+    UncountedCommit(cat.loadEntries("t1").filter(_.kind == "data")
+      .map(e => GraftCatalog.AddedFile(e.path)))(cat.commitAppend("t2", _))
     cat.adoptStatistics("t2", cat.currentSnapshotId("t2"), pref.path,
       pref.fileSizeInBytes, pref.footerSizeInBytes, partition = true)
     assert(estimate(root, "t2", Array.empty).numRows().getAsLong == 1000L)
@@ -183,7 +184,7 @@ class StatsPlanningSpec extends SparkSpec {
       .write.parquet(s"$sd/seg=s1")
     val extra = graft.sources.CompactionRunner.listParquet(s"$sd/seg=s1")
     assert(extra.nonEmpty)
-    cat.commitAppend("t2", extra.map(GraftCatalog.AddedFile(_)))
+    UncountedCommit(extra.map(GraftCatalog.AddedFile(_)))(cat.commitAppend("t2", _))
     val stale = estimate(root, "t2", Array.empty)
     assert(!stale.numRows().isPresent && !stale.sizeInBytes().isPresent,
       s"an uncovered unknown-count tuple must poison the estimate: " +
