@@ -638,6 +638,16 @@ object ScalingProbe {
       sb.append(f"| ${m}x | $n | $tF%.2f | $tI%.2f |\n")
     }
     sb.append("\nmin-of-2 over fully fresh catalog chains per cell.\n")
+    sb.append("\n")
+    sb.append("Since the compaction-through-scan-state change a catalog compaction\n")
+    sb.append("reads the snapshot's delete-masked scan (`GraftScanState`; a `SELECT *`\n")
+    sb.append("at the same snapshot leaves no delete file to decode), packs whole input\n")
+    sb.append("files by bytes into `targetPartitions` write tasks with no exchange, and\n")
+    sb.append("takes each output's counts and bounds from its footer instead of an audit\n")
+    sb.append("re-read. On perfbench (traced, seed 1, 4 cpus) `cdc_ingest`'s full\n")
+    sb.append("compaction of 86 files fell from 2.92 to 0.86 s and `mor_serve`'s\n")
+    sb.append("compaction time (delete-file sweep + `compactTable`) from 4.78 to 2.13 s;\n")
+    sb.append("the probe above predates it.\n")
 
     sb.append("\n## Stats-pruned vs full catalog scan\n\n")
     sb.append("Same corpora, range-clustered into 8×mult files with per-file\n")

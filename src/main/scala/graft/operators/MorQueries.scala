@@ -11,6 +11,14 @@ object MorQueries {
   import MorFixtures._
   import MorPlanner._
 
+  /** The session's explicit setting of `key`, None while it is at its
+    * default. Gates restore the confs they flip from this: `getOption`
+    * also returns defaults, and re-setting one pins it as an explicit
+    * setting for the rest of the session.
+    */
+  private def setting(spark: SparkSession, key: String): Option[String] =
+    spark.conf.getAll.get(key)
+
   private def q1(spark: SparkSession, sfDir: String): DataFrame = {
     val data = dataTable(spark, sfDir)
     applyPositionDeletes(data, positionDeletes(data))
@@ -838,7 +846,7 @@ object MorQueries {
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
+      .map(k => k -> setting(spark, k))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -964,7 +972,7 @@ object MorQueries {
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
+      .map(k => k -> setting(spark, k))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1110,7 +1118,7 @@ object MorQueries {
       .createOrReplaceTempView("q157_src")
     // AQE's size-based coalesce would fold the toy shuffle to one file;
     // the gate needs several range-clustered files to prove pruning
-    val oldCoalesce = spark.conf.getOption(
+    val oldCoalesce = setting(spark,
       "spark.sql.adaptive.coalescePartitions.enabled")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try spark.sql(
@@ -1810,7 +1818,7 @@ object MorQueries {
          |GROUP BY d.k""".stripMargin
     val confs = Seq("spark.sql.cbo.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString)
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val saved = confs.map { case (k, _) => k -> setting(spark, k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       def bhj(): Int = spark.sql(q).queryExecution.sparkPlan.collect {
@@ -1878,7 +1886,7 @@ object MorQueries {
          |GROUP BY d.k""".stripMargin
     val confs = Seq("spark.sql.cbo.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString)
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val saved = confs.map { case (k, _) => k -> setting(spark, k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val bhj = spark.sql(q).queryExecution.sparkPlan.collect {
@@ -1942,7 +1950,7 @@ object MorQueries {
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false")
     def withConfs[T](body: => T): T = {
-      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      val saved = confs.map { case (k, _) => k -> setting(spark, k) }
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try body finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
@@ -2137,7 +2145,7 @@ object MorQueries {
          |GROUP BY d.k""".stripMargin
     val confs = Seq("spark.sql.cbo.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString)
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val saved = confs.map { case (k, _) => k -> setting(spark, k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       def bhj(): Int = spark.sql(q).queryExecution.sparkPlan.collect {

@@ -11,8 +11,8 @@ import scala.jdk.CollectionConverters._
   * (`core/src/compaction/mod.rs:37-72`,
   * `core/src/executor/datafusion/mod.rs:101-190`).
   *
-  * Scan → hidden-column fabrication → delete application → repartition →
-  * partitioned write → per-file stats → commit manifest.
+  * Scan with deletes applied → layout → partitioned write → per-file
+  * stats from the written footers → commit manifest.
   *
   * Scale design (100 TB):
   *   - Positions come from the parquet `_metadata.row_index` column — a
@@ -27,12 +27,19 @@ import scala.jdk.CollectionConverters._
   *     data tasks is read and applied once.
   *   - Equality-delete files are read with only their equality columns
   *     projected (P4, `parser/proto.rs:137-142`).
-  *   - The write repartitions to `targetPartitions` round-robin (X1,
-  *     `datafusion_processor.rs:121-131`) and fans out by materialized
+  *   - A catalog compaction reads its input through the snapshot's planned,
+  *     delete-masked scan ([[PlannedInput]]) and, with at least
+  *     `targetPartitions` input files and no sort or fanout, writes whole
+  *     files bin-packed by bytes into `targetPartitions` tasks (S4,
+  *     `iceberg_file_task_scan.rs:114-170`) with no exchange. Otherwise
+  *     the write repartitions to `targetPartitions` round-robin, as the
+  *     reference does when the natural partitioning differs (X1,
+  *     `datafusion_processor.rs:121-131`), and fans out by materialized
   *     partition-transform columns (S7, `datafusion/mod.rs:176-188`).
-  *   - Per-file column stats (S6, `parser/proto.rs:404-434`) are computed by
-  *     one distributed audit pass over the written files; only the per-file
-  *     summary rows (one per output file) reach the driver for the manifest.
+  *   - Per-file counts, bounds and null counts (S6,
+  *     `parser/proto.rs:404-434`) come from the written footers on the
+  *     driver; only requested stats columns a footer cannot bound are
+  *     audited by one distributed pass over the written files.
   */
 object CompactionRunner {
 
@@ -118,6 +125,16 @@ object CompactionRunner {
       // but NOT retired — they may still suppress rows in data files
       // outside the delta, so the commit must keep them pending
       retireDeleteFiles: Boolean = true)
+
+  /** A rewrite's input already planned elsewhere — a snapshot's scan
+    * state, deletes applied. `files` lists each scan group's whole input
+    * files (key, bytes); `read(None)` reads them as planned, and
+    * `read(Some(tasks))` reads one partition per task, a task being a scan
+    * group's index and the keys of the whole files it reads in order.
+    */
+  final case class PlannedInput(
+      files: Seq[Seq[graft.plans.TaskGrouper.ScanTask]],
+      read: Option[Seq[(Int, Seq[String])]] => DataFrame)
 
   final case class DataFileStats(
       path: String,
@@ -1121,10 +1138,12 @@ object CompactionRunner {
     }
   }
 
-  /** EP1: full compaction — plan, merge, write, audit, commit manifest.
-    * With `canonicalSchema`, inputs resolve by field id (so a compaction
-    * across renamed file generations rewrites under the canonical names and
-    * ids).
+  /** EP1: full compaction — read with deletes applied, lay out, write,
+    * account, commit manifest. With `canonicalSchema`, inputs resolve by
+    * field id (so a compaction across renamed file generations rewrites
+    * under the canonical names and ids). `planned` is the input read
+    * through a snapshot's scan state; without it the tasks are scanned and
+    * the deletes joined here.
     */
   def compact(
       spark: SparkSession,
@@ -1133,7 +1152,8 @@ object CompactionRunner {
       eqDeletes: Seq[EqDeleteTask],
       outDir: String,
       config: CompactionConfig = CompactionConfig(),
-      canonicalSchema: Option[org.apache.spark.sql.types.StructType] = None)
+      canonicalSchema: Option[org.apache.spark.sql.types.StructType] = None,
+      planned: Option[PlannedInput] = None)
       : CommitManifest = {
     // batch_parallelism overrides a SESSION-global conf; overriding
     // compactions serialize on a JVM lock so two concurrent set/restore
@@ -1142,7 +1162,7 @@ object CompactionRunner {
     // same session is still exposed to the override window — full isolation
     // needs a per-job session (spark.newSession), the caller's choice.
     def run() = compactBody(spark, dataTasks, posDeletes, eqDeletes, outDir,
-      config, canonicalSchema)
+      config, canonicalSchema, planned)
     config.batchParallelism match {
       case None => run()
       case Some(n) =>
@@ -1163,29 +1183,42 @@ object CompactionRunner {
       eqDeletes: Seq[EqDeleteTask],
       outDir: String,
       config: CompactionConfig,
-      canonicalSchema: Option[org.apache.spark.sql.types.StructType])
+      canonicalSchema: Option[org.apache.spark.sql.types.StructType],
+      planned: Option[PlannedInput])
       : CommitManifest = {
-
-    val data = scanWithHiddenCols(spark, dataTasks, canonicalSchema)
-    val merged = MorPlanner.merge(data,
-      readPositionDeletes(spark, posDeletes),
-      readEqualityDeletes(spark, eqDeletes, Some(data.schema)))
-
-    // X1: force output stream count, like the reference when the plan's
-    // natural partitioning differs from target_partitions. With clusterBy,
-    // a RANGE repartition + in-file sort replaces round-robin so file-level
-    // min/max stats become selective; with zOrderBy the same but along the
-    // Morton curve of both columns' range-normalized ordinals.
     require(config.clusterBy.isEmpty || config.zOrderBy.isEmpty,
       "clusterBy and zOrderBy are mutually exclusive sort strategies")
-    val repartitioned =
-      if (config.zOrderBy.nonEmpty && config.targetPartitions > 0)
-        zOrderCluster(merged, data, config.zOrderBy, config.targetPartitions)
-      else if (config.clusterBy.nonEmpty && config.targetPartitions > 0)
-        merged.repartitionByRange(config.targetPartitions,
-            config.clusterBy.map(col): _*)
-      else if (config.targetPartitions > 0) merged.repartition(config.targetPartitions)
+    val n = config.targetPartitions
+    // the delete-applied input, and the frame a z-order takes its column
+    // ranges from (bounds over the pre-delete scan are valid bounds too)
+    lazy val (merged, rangeSource) = planned match {
+      case Some(p) =>
+        val m = p.read(None)
+        (m, m)
+      case None =>
+        val data = scanWithHiddenCols(spark, dataTasks, canonicalSchema)
+        (MorPlanner.merge(data,
+          readPositionDeletes(spark, posDeletes),
+          readEqualityDeletes(spark, eqDeletes, Some(data.schema))), data)
+    }
+    // S4: whole input files bin-packed into the output tasks — no
+    // exchange, no input file split across two outputs. X1: force the
+    // output stream count only when the input's layout differs: with
+    // clusterBy a RANGE repartition + in-file sort makes file-level
+    // min/max stats selective; with zOrderBy the same along the Morton
+    // curve of the columns' range-normalized ordinals.
+    val wholeFiles =
+      if (config.clusterBy.nonEmpty || config.zOrderBy.nonEmpty ||
+          config.partitionTransforms.nonEmpty) None
+      else planned.flatMap(p => wholeFileTasks(p.files, n).map(t => p.read(Some(t))))
+    val repartitioned = wholeFiles.getOrElse {
+      if (config.zOrderBy.nonEmpty && n > 0)
+        zOrderCluster(merged, rangeSource, config.zOrderBy, n)
+      else if (config.clusterBy.nonEmpty && n > 0)
+        merged.repartitionByRange(n, config.clusterBy.map(col): _*)
+      else if (n > 0) merged.repartition(n)
       else merged
+    }
 
     // S7: materialize partition-transform columns and fan out.
     val dataOut = s"$outDir/data"
@@ -1202,7 +1235,7 @@ object CompactionRunner {
     // rows stream into each file in cluster order; unpartitioned rewrites
     // sort by clusterBy exactly as before.
     val withParts =
-      if (config.clusterBy.nonEmpty && config.targetPartitions > 0)
+      if (config.clusterBy.nonEmpty && n > 0)
         withParts0.sortWithinPartitions(
           (config.partitionTransforms.map(p => col(p._1)) ++
             config.clusterBy.map(col)): _*)
@@ -1210,7 +1243,8 @@ object CompactionRunner {
     // §1.3: stamp parquet.field.id metadata so the written files carry the
     // Iceberg-style field ids (persisted to the parquet footer; read back
     // into scan schemas — the handle eq-delete resolution keys on).
-    val writer = FieldIds.withFieldIds(withParts).write.mode("overwrite")
+    val stamped = FieldIds.withFieldIds(withParts)
+    val writer = stamped.write.mode("overwrite")
     (if (config.partitionTransforms.nonEmpty)
        writer.partitionBy(config.partitionTransforms.map(_._1): _*)
      else writer).parquet(dataOut)
@@ -1219,10 +1253,10 @@ object CompactionRunner {
     // (the reference names its writer outputs `{prefix}-{uuid}.parquet`).
     // Hadoop FS rename, scheme-agnostic; one driver call per OUTPUT file —
     // the same cardinality as the manifest entries built below.
+    val hconf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(dataOut)
+    val fs = root.getFileSystem(hconf)
     config.dataFilePrefix.foreach { prefix =>
-      val hconf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(dataOut)
-      val fs = root.getFileSystem(hconf)
       val it = fs.listFiles(root, true)
       while (it.hasNext) {
         val st = it.next()
@@ -1236,38 +1270,77 @@ object CompactionRunner {
       }
     }
 
-    // S6: per-file column stats via one distributed audit over written files.
+    // S6: per-file counts, bounds and null counts from the written
+    // footers, on the driver. The written files are the data files a
+    // parquet read of `dataOut` lists (hidden `_`/`.` names skipped),
+    // each recorded under the rendering `_metadata.file_path` gives it
+    // (Hadoop's URI with an empty authority dropped: `file:/…`).
+    def leaves(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) Nil
+        else if (st.isDirectory) leaves(st.getPath)
+        else Seq(st.getPath)
+      }
+    val outputs = leaves(root).sortBy(_.toString)
+    val footers = parquetFooterMetricsBulk(outputs.map(_.toString), hconf)
+    // a footer bounds a column when it records its null count and either
+    // bounds or only nulls; requested columns some footer cannot bound
+    // (floating point, dates, long strings), and every column of an
+    // unreadable footer, take one distributed audit over the written files
+    def bounds(m: FooterMetrics, c: String): Boolean =
+      m.nullCounts.get(c).exists(nn =>
+        nn == m.rows || (m.colMins.contains(c) && m.colMaxs.contains(c)))
     val statsCols = config.statsCols
-    val written = spark.read.parquet(dataOut)
-    val aggs =
-      count(lit(1)).as("record_count") +:
-        statsCols.flatMap(c => Seq(
-          min(col(c)).cast("string").as(s"min_$c"),
-          max(col(c)).cast("string").as(s"max_$c"),
-          sum(col(c).isNull.cast("long")).as(s"nulls_$c")))
-    val statRows = written
-      .groupBy(col("_metadata.file_path").as("path"),
-        col("_metadata.file_size").as("size"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // one row per output file — driver-sized, like DataFile metadata
-    val added = statRows.map { r =>
-      DataFileStats(
-        path = r.getAs[String]("path"),
-        sizeBytes = r.getAs[Long]("size"),
-        recordCount = r.getAs[Long]("record_count"),
-        colMins = statsCols.map(c => c -> String.valueOf(r.getAs[Any](s"min_$c"))).toMap,
-        colMaxs = statsCols.map(c => c -> String.valueOf(r.getAs[Any](s"max_$c"))).toMap,
-        nullCounts = statsCols.map(c => c -> r.getAs[Long](s"nulls_$c")).toMap)
-    }.toSeq
+    val unreadable = footers.exists(_.rows < 0)
+    val auditCols =
+      if (unreadable) statsCols
+      else statsCols.filterNot(c => footers.forall(bounds(_, c)))
+    val audited: Map[String, org.apache.spark.sql.Row] =
+      if (!unreadable && auditCols.isEmpty) Map.empty
+      else {
+        val aggs =
+          count(lit(1)).as("record_count") +:
+            auditCols.flatMap(c => Seq(
+              min(col(c)).cast("string").as(s"min_$c"),
+              max(col(c)).cast("string").as(s"max_$c"),
+              sum(col(c).isNull.cast("long")).as(s"nulls_$c")))
+        spark.read.parquet(dataOut)
+          .groupBy(col("_metadata.file_path").as("path"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect() // one row per output file — driver-sized, like DataFile metadata
+          .map(r => canonDecoded(r.getAs[String]("path")) -> r).toMap
+      }
+    val added = outputs.zip(footers).flatMap { case (p, m) =>
+      val path = {
+        val u = p.toUri
+        new java.net.URI(u.getScheme, u.getAuthority, u.getPath, null, null).toString
+      }
+      val audit = audited.get(canonDecoded(path))
+      val rows = if (m.rows >= 0) m.rows else audit.fold(0L)(_.getAs[Long]("record_count"))
+      def fromAudit[V](v: (org.apache.spark.sql.Row, String) => V): Map[String, V] =
+        audit.fold(Map.empty[String, V])(r => auditCols.map(c => c -> v(r, c)).toMap)
+      if (rows == 0L) None // an empty write leaves a file with no rows
+      else Some(DataFileStats(
+        path = path,
+        sizeBytes = if (m.bytes >= 0) m.bytes else fs.getFileStatus(p).getLen,
+        recordCount = rows,
+        colMins = m.colMins ++ fromAudit((r, c) => String.valueOf(r.getAs[Any](s"min_$c"))),
+        colMaxs = m.colMaxs ++ fromAudit((r, c) => String.valueOf(r.getAs[Any](s"max_$c"))),
+        nullCounts = m.nullCounts ++ fromAudit((r, c) => r.getAs[Long](s"nulls_$c"))))
+    }
 
-    // RewriteFilesStat counters: input bytes via driver-side file status
-    // (one stat call per input file — the same driver-sized metadata the
-    // reference already holds in its DataFile list).
-    val removedData = dedupByPath(dataTasks)(_.path).map(t => canonPath(t.path))
-    val rewrittenBytes = dedupByPath(dataTasks)(_.path).map { t =>
-      try new java.io.File(
-        canonPath(t.path).stripPrefix("file://")).length()
-      catch { case _: Throwable => 0L }
+    // RewriteFilesStat counters: input bytes from each input file's
+    // FileSystem status (any scheme; one driver call per input file, on
+    // the footer pool — the same driver-sized metadata the reference
+    // holds in its DataFile list).
+    val inputs = dedupByPath(dataTasks)(_.path)
+    val removedData = inputs.map(t => canonPath(t.path))
+    val rewrittenBytes = onFooterPool(inputs.map(_.path)) { p =>
+      try {
+        val hp = new org.apache.hadoop.fs.Path(p)
+        hp.getFileSystem(hconf).getFileStatus(hp).getLen
+      } catch { case scala.util.control.NonFatal(_) => 0L }
     }.sum
     val manifest = CommitManifest(
       addedFiles = added,
@@ -1285,11 +1358,11 @@ object CompactionRunner {
     // Spec-shaped Iceberg manifest (Avro container, id-keyed bounds): ADDED
     // entries for the new files, DELETED entries for the compacted inputs —
     // the structures a real catalog commit would write, readable back via
-    // IcebergManifest.read for stats pruning.
-    val formatByPath = dedupByPath(dataTasks)(_.path)
-      .map(t => canonPath(t.path) -> t.format.toLowerCase).toMap
+    // IcebergManifest.read for stats pruning. Its schema is the one the
+    // footers were written from.
+    val formatByPath = inputs.map(t => canonPath(t.path) -> t.format.toLowerCase).toMap
     IcebergManifest.write(s"$outDir/_graft_manifest.avro",
-      conf = spark.sessionState.newHadoopConf(),
+      conf = hconf,
       entries =
       added.map(IcebergManifest.ManifestEntry(IcebergManifest.StatusAdded, _)) ++
         (manifest.removedDataFiles ++ manifest.removedDeleteFiles).map(p =>
@@ -1297,8 +1370,36 @@ object CompactionRunner {
             DataFileStats(p, 0L, 0L, Map.empty, Map.empty, Map.empty),
             // removed DATA files keep their wire format; delete files are parquet
             format = formatByPath.getOrElse(p, "parquet"))),
-      schema = written.schema)
+      schema = stamped.schema)
     manifest
+  }
+
+  /** S4: the input's whole files bin-packed into `n` output tasks, or None
+    * when they cannot fill `n` tasks (fewer files than `n`, or more scan
+    * groups than `n`). Each scan group (a footer schema) gets a share of
+    * the tasks proportional to its bytes — at least one, at most its file
+    * count — and packs its files into them longest first
+    * ([[graft.plans.TaskGrouper]]). Deterministic.
+    */
+  private def wholeFileTasks(
+      groups: Seq[Seq[graft.plans.TaskGrouper.ScanTask]],
+      n: Int): Option[Seq[(Int, Seq[String])]] = {
+    val live = groups.zipWithIndex.filter(_._1.nonEmpty)
+    if (n <= 0 || live.map(_._1.size).sum < n || live.size > n) None
+    else {
+      val bytes = live.map(_._1.map(_.lengthBytes.max(0L)).sum.toDouble)
+      val shares = Array.fill(live.size)(1)
+      // highest-averages apportionment: each further task goes to the
+      // group with the most bytes per task that still has a file to spare
+      (live.size until n).foreach { _ =>
+        val open = live.indices.filter(i => shares(i) < live(i)._1.size)
+        shares(open.maxBy(i => (bytes(i) / shares(i), -i))) += 1
+      }
+      Some(live.zip(shares).flatMap { case ((files, gi), k) =>
+        val longestFirst = files.sortBy(f => (-f.lengthBytes, f.path))
+        graft.plans.TaskGrouper.group(longestFirst, k).map(g => gi -> g.map(_.path))
+      })
+    }
   }
 
   /** Stats-based file pruning: keep only files whose [min,max] range for

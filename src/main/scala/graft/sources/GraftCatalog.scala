@@ -5369,6 +5369,7 @@ final class GraftCatalog(root: String,
       outDir: String,
       config: CompactionConfig = CompactionConfig()): (Long, CommitManifest) =
     withTableLock(table) {
+      val sid = currentSnapshotId(table)
       val entries = loadEntries(table)
       // hidden partitioning: a declared spec drives the fanout write unless
       // the caller supplied explicit transforms (explicit wins, spec-less
@@ -5406,7 +5407,8 @@ final class GraftCatalog(root: String,
         },
         outDir,
         sized,
-        currentSchema(table))
+        schemaAt(table, sid),
+        dsv2.GraftScanState.rewriteInput(spark, this, root, table, sid, keep = None))
       val maxSeq = entries.map(_.seqNum).max
       val partNames = effective.partitionTransforms.map(_._1)
       // each file records WHICH transform produced its tuple values — the
@@ -5588,7 +5590,10 @@ final class GraftCatalog(root: String,
               layout.copy(retireDeleteFiles = false),
               entries.filter(e => e.kind == "data" &&
                 deltaPaths(CompactionRunner.canonPath(e.path)))),
-            currentSchema(table))
+            schemaAt(table, head),
+            // the snapshot's scan state pruned to the delta files
+            dsv2.GraftScanState.rewriteInput(spark, this, root, table, head,
+              keep = Some(delta.map(t => CompactionRunner.canonKey(t.path)).toSet)))
           val maxSeq = entries.map(_.seqNum).max
           val added = manifest.addedFiles
             .map(f => TableEntry("data", f.path, maxSeq + 1, "parquet", Nil,

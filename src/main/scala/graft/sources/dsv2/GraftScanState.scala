@@ -1,13 +1,19 @@
 package graft.sources.dsv2
 
-import org.apache.spark.Partition
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.sources.{CompactionRunner, GraftCatalog}
+import scala.jdk.CollectionConverters._
+
+import graft.plans.TaskGrouper
+import graft.sources.{CompactionRunner, FieldIds, GraftCatalog}
 
 /** SNAPSHOT-SCOPED SCAN STATE: everything a doorway batch read of one
   * snapshot needs that does not depend on the statement's filters, built
@@ -41,6 +47,10 @@ import graft.sources.{CompactionRunner, GraftCatalog}
   * changed ([[GraftColumnarMask.plan]]'s pieces). A build from nothing is
   * the same function over empty pieces.
   *
+  * A catalog compaction reads its input through the same head state
+  * ([[GraftScanState.rewriteInput]]), regrouping the planned splits by
+  * whole file.
+  *
   * A plan that cannot be sliced by file (a shuffle-bearing row path) keeps
   * its per-filter served groups inside the state instead, under the same
   * LRU rule as the states themselves. Runtime-filtered (DPP) reads prune
@@ -55,6 +65,52 @@ private[dsv2] final class GraftScanState private (
     private val pieces: GraftColumnarMask.Pieces) {
 
   private val unsliced = GraftScanState.lru[Seq[String], Seq[GraftServedGroup]]()
+
+  /** [[GraftScanState.rewriteInput]] over this state's sliced plan: each
+    * scan group's splits regrouped by whole file, read as rows of
+    * `schema` (the required columns in order).
+    */
+  private def rewriteInput(
+      spark: SparkSession,
+      schema: StructType,
+      keep: Option[Set[String]]): Option[CompactionRunner.PlannedInput] =
+    sliced.flatMap { groups =>
+      // per scan group: file key -> its splits, in planned order
+      val splits: Seq[Seq[(String, Seq[PartitionedFile])]] = groups.map { g =>
+        val files = g.parts.collect { case fp: FilePartition => fp.files.toSeq }.flatten
+        files.groupBy(pf => CompactionRunner.canonDecoded(pf.filePath.toString)).toSeq
+          .filter { case (k, _) => keep.forall(_.contains(k)) }
+          .sortBy(_._1)
+          .map { case (k, ps) => k -> ps.sortBy(_.start) }
+      }
+      val wanted = keep.getOrElse(entries.collect {
+        case e if e.kind == "data" => CompactionRunner.canonKey(e.path)
+      }.toSet)
+      val planned = splits.flatten.map(_._1)
+      if (planned.size != wanted.size || planned.toSet != wanted) None
+      else {
+        val rdds = groups.map {
+          case GraftColumnarSlices(_, rdd, _) => Left(rdd)
+          case GraftRowSlices(_, rdd, _) => Right(rdd)
+        }
+        val byKey = splits.map(_.toMap)
+        def read(tasks: Option[Seq[(Int, Seq[String])]]): DataFrame = {
+          val parts: Seq[(Int, Partition)] = tasks match {
+            case None => groups.zipWithIndex.flatMap { case (g, i) =>
+              keep.fold(g.parts)(GraftScanState.prune(spark, g.parts, _)).map(i -> _)
+            }
+            case Some(ts) => ts.zipWithIndex.map { case ((gi, keys), idx) =>
+              gi -> FilePartition(idx, keys.flatMap(byKey(gi)).toArray)
+            }
+          }
+          DatasetBridge.rowsFrame(spark,
+            new GraftScanState.SliceRows(spark.sparkContext, rdds, parts), schema)
+        }
+        Some(CompactionRunner.PlannedInput(
+          splits.map(_.map { case (k, ps) => TaskGrouper.ScanTask(k, ps.map(_.length).sum) }),
+          read))
+      }
+    }
 
   private def serve(
       spark: SparkSession,
@@ -103,7 +159,7 @@ private[dsv2] final class GraftScanState private (
     }
 }
 
-private[dsv2] object GraftScanState {
+private[graft] object GraftScanState {
 
   /** States (and each state's filter-keyed entries) kept, most recently
     * used first. The states hold LAZY rdds and one broadcast each —
@@ -154,16 +210,29 @@ private[dsv2] object GraftScanState {
       runtimeKeep: Option[Set[String]]): Seq[GraftServedGroup] = {
     val cat = new GraftCatalog(root)
     val sid = asOf.getOrElse(cat.currentSnapshotId(table))
+    stateOf(spark, root, table, cat, sid, asOf.isDefined, required)
+      .serve(spark, cat, root, table, asOf.isDefined, required, filters, runtimeKeep)
+  }
+
+  /** The state of `table` at `sid`, cached or built. */
+  private def stateOf(
+      spark: SparkSession,
+      root: String,
+      table: String,
+      cat: GraftCatalog,
+      sid: Long,
+      pinned: Boolean,
+      required: StructType): GraftScanState = {
     val lineage = Lineage(DatasetBridge.sessionUUID(spark), root, table,
       cat.tableUuid(table).getOrElse(""), required.catalogString,
       GraftColumnarMask.disableForProbes)
-    val key = Key(lineage, asOf.isDefined, sid)
-    val state = states.synchronized(Option(states.get(key))).getOrElse {
+    val key = Key(lineage, pinned, sid)
+    states.synchronized(Option(states.get(key))).getOrElse {
       // a head state is built from the most recently used head state of
       // its lineage (the states iterate least recently used first); a
       // pinned one from nothing
       val prev =
-        if (asOf.isDefined) GraftColumnarMask.NoPieces
+        if (pinned) GraftColumnarMask.NoPieces
         else states.synchronized {
           var last = GraftColumnarMask.NoPieces
           states.forEach((k, st) => if (k.lineage == lineage && !k.pinned) last = st.pieces)
@@ -173,7 +242,38 @@ private[dsv2] object GraftScanState {
       states.synchronized(states.put(key, built))
       built
     }
-    state.serve(spark, cat, root, table, asOf.isDefined, required, filters, runtimeKeep)
+  }
+
+  /** A rewrite's input: the delete-applied rows of `table` at `sid`, read
+    * through the snapshot's head state — the one a full-row (`SELECT *`)
+    * read at that snapshot built, else built here from the previous head
+    * state exactly as that read would build it. The caller holds the table
+    * lock, so `sid` is the head; nothing here takes the lock. `keep`
+    * (canonical keys) restricts the input to those data files. None when
+    * the state's plan cannot be sliced by file, or its files are not
+    * exactly the ones asked for: the caller's row path reads instead.
+    */
+  private[graft] def rewriteInput(
+      spark: SparkSession,
+      cat: GraftCatalog,
+      root: String,
+      table: String,
+      sid: Long,
+      keep: Option[Set[String]]): Option[CompactionRunner.PlannedInput] = {
+    // the schema a full-row doorway read projects: the snapshot's, else
+    // (a schema-less table) its data files' one footer schema
+    val schema = cat.schemaAt(table, sid).orElse {
+      val data = cat.loadEntriesAt(table, sid).filter(_.kind == "data")
+      if (data.isEmpty || data.exists(_.format != "parquet")) None
+      else CompactionRunner.schemaGroups(spark, data.map(_.path)) match {
+        case Seq((s, _)) => Some(s)
+        case _ => None
+      }
+    }
+    schema.flatMap { s =>
+      stateOf(spark, root, table, cat, sid, pinned = false, FieldIds.stripIds(s))
+        .rewriteInput(spark, s, keep)
+    }
   }
 
   /** The one state builder: `prev` lends the pieces of a masked plan it
@@ -214,6 +314,31 @@ private[dsv2] object GraftScanState {
             GraftColumnarSlices(null, _, _))
           .orElse(slices(fs.map(DatasetBridge.rowFileScan), GraftRowSlices(null, _, _)))
         new GraftScanState(sid, entries, plan, None, GraftColumnarMask.NoPieces)
+    }
+  }
+
+  private final case class SlicePartition(index: Int, group: Int, inner: Partition)
+      extends Partition
+
+  /** Rows of foreign splits of planned scans, one partition per split:
+    * partition i computes split `parts(i)._2` of scan `parts(i)._1`. No
+    * dependency: each split is computed inside its own task.
+    */
+  private final class SliceRows(
+      sc: SparkContext,
+      scans: Seq[Either[RDD[ColumnarBatch], RDD[InternalRow]]],
+      @transient private val parts: Seq[(Int, Partition)])
+      extends RDD[InternalRow](sc, Nil) {
+    override protected def getPartitions: Array[Partition] =
+      parts.zipWithIndex.map { case ((g, p), i) => SlicePartition(i, g, p): Partition }.toArray
+
+    override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] = {
+      val s = split.asInstanceOf[SlicePartition]
+      scans(s.group) match {
+        case Left(batches) =>
+          batches.iterator(s.inner, ctx).flatMap(_.rowIterator().asScala)
+        case Right(rows) => rows.iterator(s.inner, ctx)
+      }
     }
   }
 

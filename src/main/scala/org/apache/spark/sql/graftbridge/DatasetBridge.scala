@@ -332,6 +332,18 @@ object DatasetBridge {
     fileScanLeaf(rdd).map(leaf => (rdd, leaf.filePartitions))
   }
 
+  /** A batch frame over `rdd`'s rows of `schema`, every column nullable
+    * as a file scan reads it, one plan partition per rdd partition — the
+    * frame plans no exchange of its own, so a write of it runs one task
+    * per partition.
+    */
+  def rowsFrame(
+      spark: SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rdd, schema.asNullable)
+
   /** The inverse of [[asBatch]] for a V1 streaming SOURCE's `getBatch`:
     * the engine requires the returned frame to be streaming-tagged, while
     * the rows come from an ordinary batch read of the delta files.

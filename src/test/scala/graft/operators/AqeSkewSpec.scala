@@ -28,15 +28,8 @@ class AqeSkewSpec extends SparkSpec {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4096",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
-  private def withConf[A](pairs: Seq[(String, String)])(body: => A): A = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withConf[A](pairs: Seq[(String, String)])(body: => A): A =
+    withConfs(pairs: _*)(body)
 
   /** One hot orderkey (42) carrying 75% of the fact side + a uniform tail —
     * the distribution that funnels one reducer at any cluster size.

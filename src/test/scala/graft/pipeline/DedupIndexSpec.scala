@@ -51,9 +51,6 @@ class DedupIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_dedup_idx_").toString
     val (old, batch) = corpusSplit()
     val idx = DedupIndex.create(spark, "didx3", dir, old)
-    val conf = spark.conf
-    val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
     try {
       // several small appends — the classic per-batch small-file growth
       (0 to 2).foreach { i =>
@@ -78,22 +75,19 @@ class DedupIndexSpec extends SparkSpec {
       assert(spark.table("didx3_bands").inputFiles.length < bandsBefore)
       // probe plan STILL consumes the bucket layout with zero index-side
       // exchange — the rewrite must preserve the bucket spec
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "false")
-      val plan = idx.probePlan(batch).queryExecution.executedPlan.toString
+      val plan = withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
+        idx.probePlan(batch).queryExecution.executedPlan.toString
+      }
       val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
       assert(exchanges == 1, s"expected 1 exchange (probe side only):\n$plan")
       assert(plan.contains("Bucketed: true"), s"index scan not bucketed:\n$plan")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
       // verdicts are byte-identical pre/post compaction
       val verdictsAfter = idx.dedupBatch(batch)
         .select(col("doc_id"), col("verdict")).collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
       assert(verdictsAfter == verdictsBefore, "compaction changed dedup verdicts")
     } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
       idx.drop()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
@@ -103,12 +97,8 @@ class DedupIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_dedup_idx_").toString
     val (old, batch) = corpusSplit()
     val idx = DedupIndex.create(spark, "didx2", dir, old)
-    val conf = spark.conf
-    val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "false")
+    try withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val plan = idx.probePlan(batch).queryExecution.executedPlan.toString
       // exactly ONE exchange: the (small) probe side re-bucketing; the
       // index side scan consumes its bucket layout directly
@@ -117,8 +107,6 @@ class DedupIndexSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"), plan)
       assert(plan.contains("Bucketed: true"), s"index scan not bucketed:\n$plan")
     } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
       idx.drop()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }

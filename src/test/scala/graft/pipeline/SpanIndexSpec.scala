@@ -88,20 +88,14 @@ class SpanIndexSpec extends SparkSpec {
   test("probe exchanges only the batch side; index scan consumes its buckets") {
     val dir = Files.createTempDirectory("graft_span_idx_").toString
     val idx = SpanIndex.create(spark, "sidx3", dir, corpus())
-    val conf = spark.conf
-    val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    try {
-      // force the shuffle-join path (broadcast would hide the layout claim)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "false")
+    // force the shuffle-join path (broadcast would hide the layout claim)
+    try withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val plan = idx.probePlan(batch()).queryExecution.executedPlan.toString
       val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
       assert(exchanges == 1, s"want 1 exchange (batch side only), got $exchanges:\n$plan")
       assert(plan.contains("Bucketed: true"), s"index scan not bucketed:\n$plan")
     } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
       idx.drop()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
@@ -110,9 +104,6 @@ class SpanIndexSpec extends SparkSpec {
   test("compactIndex collapses small files; answers and bucket layout survive") {
     val dir = Files.createTempDirectory("graft_span_idx_").toString
     val idx = SpanIndex.create(spark, "sidx4", dir, corpus())
-    val conf = spark.conf
-    val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
     try {
       (0 to 2).foreach { i =>
         idx.append(batch().filter(col("doc_id") % 3 === i))
@@ -132,15 +123,14 @@ class SpanIndexSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(after == before, "compaction changed probe answers")
 
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "false")
-      val plan = idx.probePlan(batch()).queryExecution.executedPlan.toString
+      val plan = withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
+        idx.probePlan(batch()).queryExecution.executedPlan.toString
+      }
       assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1 &&
         plan.contains("Bucketed: true"),
         s"rewrite lost the bucket layout:\n$plan")
     } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
       idx.drop()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }

@@ -59,12 +59,8 @@ class VectorIndexSpec extends SparkSpec {
   test("probe consumes the index bucket layout without an index-side exchange") {
     val dir = Files.createTempDirectory("graft_vec_idx_").toString
     val idx = VectorIndex.create(spark, "vidx3", dir, corpus())
-    val conf = spark.conf
-    val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "false")
+    try withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val plan = idx.probePlan(queries()).queryExecution.executedPlan.toString
       // the cid equi-join: probe side re-buckets (1 exchange), index scan
       // consumes its bucket layout; window operators add NO extra
@@ -74,8 +70,6 @@ class VectorIndexSpec extends SparkSpec {
       assert(joinExchanges == 1,
         s"expected exactly 1 cid exchange (probe side only):\n$plan")
     } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
       idx.drop()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }

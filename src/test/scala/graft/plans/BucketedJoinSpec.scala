@@ -20,9 +20,6 @@ class BucketedJoinSpec extends SparkSpec {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_quantity"))
-    val conf = spark.conf
-    val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
     try {
       o.write.mode("overwrite").bucketBy(4, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$dir/orders_b").saveAsTable("orders_b")
@@ -30,8 +27,8 @@ class BucketedJoinSpec extends SparkSpec {
         .option("path", s"$dir/lineitem_b").saveAsTable("lineitem_b")
       // force the shuffle-or-not decision to be bucketing's alone: no
       // broadcast fallback, no AQE re-planning hiding the initial shape
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "false")
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
       val joined = spark.table("orders_b")
         .join(spark.table("lineitem_b"),
           col("o_orderkey") === col("l_orderkey"))
@@ -48,9 +45,8 @@ class BucketedJoinSpec extends SparkSpec {
         .groupBy(col("o_orderkey")).agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(viaBuckets == viaShuffle)
+      }
     } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))

@@ -247,16 +247,12 @@ class PartitionFieldSqlSpec extends SparkSpec {
     // per-file k-ranges make the point lookup stats-prunable (AQE's
     // size-based coalesce would fold the toy-sized shuffle into ONE file
     // and hide the clustering — disable it for the fixture write only)
-    val oldCoalesce =
-      spark.conf.getOption("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try spark.sql(
-      s"""INSERT INTO $g.t
-         |SELECT /*+ REPARTITION(4) */ id, concat('v', id)
-         |FROM range(0, 4000)""".stripMargin)
-    finally oldCoalesce.fold(
-      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled"))(
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", _))
+    withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      spark.sql(
+        s"""INSERT INTO $g.t
+           |SELECT /*+ REPARTITION(4) */ id, concat('v', id)
+           |FROM range(0, 4000)""".stripMargin)
+    }
     val files = cat.loadEntries("t").filter(_.kind == "data")
     assert(files.size > 1, "fixture must write multiple files")
     val pruned = cat.scanTableWhere(spark, "t", "k", 7.0, 7.0)

@@ -154,10 +154,7 @@ class ChangelogSpec extends SparkSpec {
       Seq((101L, "v101")).toDF("k", "v"), Seq("k"), s"$out/u1")
     val parts = cat.changelogParts(spark, "t", s2, s4)
     assert(parts.size == 2, s"expected I and D branches, got ${parts.size}")
-    val conf = spark.conf
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    try {
-      conf.set("spark.sql.adaptive.enabled", "false")
+    withConfs("spark.sql.adaptive.enabled" -> "false") {
       parts.foreach { p =>
         val shuffles = p.queryExecution.executedPlan.collect {
           case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
@@ -166,7 +163,7 @@ class ChangelogSpec extends SparkSpec {
           s"a gated window's branch must plan shuffle-free, got:\n" +
             p.queryExecution.executedPlan)
       }
-    } finally conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     val got = parts.map(rows).reduce(_ ++ _)
     assert(got == rows(cat.changelog(spark, "t", s2, s4)))
     assert(got == Set((20L, "v20", "D"), (30L, "v30", "D"),

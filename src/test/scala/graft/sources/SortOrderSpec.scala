@@ -57,8 +57,24 @@ class SortOrderSpec extends SparkSpec {
       CompactionConfig(targetPartitions = 4, clusterBy = Seq("v"),
         statsCols = Seq("v")))
     val entries = cat.loadEntries("t").filter(_.kind == "data")
-    // the caller asked for v-clustering: k bounds were NOT collected
-    assert(entries.forall(_.stats.forall(!_.colMins.contains("k"))))
+    // the caller asked for v-clustering: the files' v ranges are disjoint,
+    // their k ranges (keys shuffled against v) overlap, and the head is
+    // not stamped as sorted by the declared k order
+    def ranges(c: String) = entries.map { e =>
+      val st = e.stats.getOrElse(fail(s"no stats on ${e.path}"))
+      (st.colMins(c), st.colMaxs(c))
+    }
+    val v = ranges("v").sortBy(_._1)
+    v.sliding(2).foreach {
+      case Seq((_, hi), (lo2, _)) => assert(hi < lo2, s"overlapping v bounds: $v")
+      case _ =>
+    }
+    val k = ranges("k").map { case (lo, hi) => (lo.toLong, hi.toLong) }.sortBy(_._1)
+    assert(k.sliding(2).exists {
+      case Seq((_, hi), (lo2, _)) => hi >= lo2
+      case _ => false
+    }, s"k bounds are disjoint, as if k-sorted: $k")
+    assert(!cat.sortedSnapshot("t").exists(_._1 == cat.currentSnapshotId("t")))
   }
 
   test("clearing, duplicates, forks") {

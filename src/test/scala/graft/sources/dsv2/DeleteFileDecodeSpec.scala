@@ -81,15 +81,8 @@ class DeleteFileDecodeSpec extends SparkSpec {
     ("TIMESTAMP_NTZ", Seq("TIMESTAMP_NTZ'2020-01-01 10:00:00.5'", "TIMESTAMP_NTZ'1970-01-01 00:00:00'"),
       Seq("TIMESTAMP_NTZ'2020-01-01 10:00:00.5'"), Map.empty))
 
-  private def withConf[T](kv: Map[String, String])(body: => T): T = {
-    val saved = kv.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withConf[T](kv: Map[String, String])(body: => T): T =
+    withConfs(kv.toSeq: _*)(body)
 
   /** A table of `keys` (k of `sqlType`, v = 'd<i>') with `upserted` keys
     * upserted to v = 'u' (one equality-delete file on k).
@@ -147,7 +140,9 @@ class DeleteFileDecodeSpec extends SparkSpec {
   test("position files under paths with spaces decode on the driver") {
     val root = Files.createTempDirectory("graft decode spacey").toString
     val g = mount(root)
-    spark.sql(s"CREATE TABLE $g.t (k BIGINT, v STRING) " +
+    // partitioned by a value with a space: the data files live under
+    // `v=NOT SPECIFIED/` and `v=a b/` inside a root with spaces
+    spark.sql(s"CREATE TABLE $g.t (k BIGINT, v STRING) PARTITIONED BY (v) " +
       "TBLPROPERTIES ('write.delete.mode' = 'merge-on-read')")
     spark.sql(s"INSERT INTO $g.t SELECT /*+ REPARTITION(3) */ id, " +
       "IF(id % 3 = 0, 'NOT SPECIFIED', 'a b') FROM range(0, 300)")
@@ -155,7 +150,10 @@ class DeleteFileDecodeSpec extends SparkSpec {
     val entries = new GraftCatalog(root).loadEntries("t")
     val pos = entries.filter(_.kind == "posdel")
     assert(pos.nonEmpty && pos.forall(_.path.contains(" ")))
-    assert(entries.filter(_.kind == "data").forall(_.path.contains(" ")))
+    val data = entries.filter(_.kind == "data")
+    assert(data.forall(_.path.contains(" ")) &&
+      data.map(_.partitionVals("v")).toSet == Set("NOT SPECIFIED", "a b"),
+      data.map(e => (e.path, e.partitionVals)))
     val rows = maskedEqualsRowPath(s"SELECT k, v FROM $g.t", deleteFiles = pos.size)
     assert(rows.size == 250)
   }

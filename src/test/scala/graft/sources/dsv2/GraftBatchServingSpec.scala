@@ -322,7 +322,7 @@ class GraftBatchServingSpec extends SparkSpec {
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
+      .map(k => k -> spark.conf.getAll.get(k))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -375,7 +375,7 @@ class GraftBatchServingSpec extends SparkSpec {
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
+      .map(k => k -> spark.conf.getAll.get(k))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -452,7 +452,7 @@ class GraftBatchServingSpec extends SparkSpec {
       Seq(GraftCatalog.AddedFile(delPath, "parquet",
         recordCount = 1L, sizeBytes = -1L)))
     val olds = Seq("spark.sql.sources.v2.bucketing.enabled")
-      .map(k => k -> spark.conf.getOption(k))
+      .map(k => k -> spark.conf.getAll.get(k))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val onePlan0 = GraftKeyedServing.onePlanServed.get()
     try {
@@ -487,7 +487,7 @@ class GraftBatchServingSpec extends SparkSpec {
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
+      .map(k => k -> spark.conf.getAll.get(k))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -527,7 +527,7 @@ class GraftBatchServingSpec extends SparkSpec {
     (0L until 100L).map(i => (i, if (i == 41 || i == 42) "x" else "y"))
       .toDF("k", "tag").write.mode("overwrite").parquet(s"$root/dim")
     spark.read.parquet(s"$root/dim").createOrReplaceTempView("dpp_dim_k")
-    val old = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
+    val old = spark.conf.getAll.get("spark.sql.sources.v2.bucketing.enabled")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {
       val joined = spark.sql(
@@ -557,7 +557,7 @@ class GraftBatchServingSpec extends SparkSpec {
     // must refuse the keyed layout.
     val root = Files.createTempDirectory("graft-serve-mor-upd").toString
     val g = mountCatalog(root)
-    val old = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
+    val old = spark.conf.getAll.get("spark.sql.sources.v2.bucketing.enabled")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {
       spark.sql(
@@ -592,7 +592,7 @@ class GraftBatchServingSpec extends SparkSpec {
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
+      .map(k => k -> spark.conf.getAll.get(k))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -617,7 +617,7 @@ class GraftBatchServingSpec extends SparkSpec {
     val g = mountCatalog(root)
     spark.sql(s"CREATE TABLE $g.t (k BIGINT, v DOUBLE) PARTITIONED BY (bucket(4, k))")
     spark.sql(s"INSERT INTO $g.t SELECT id % 50, id * 0.5 FROM range(0, 2000)")
-    val old = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
+    val old = spark.conf.getAll.get("spark.sql.sources.v2.bucketing.enabled")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {
       val agg = spark.sql(s"SELECT k, sum(v) AS s FROM $g.t GROUP BY k")
@@ -651,7 +651,7 @@ class GraftBatchServingSpec extends SparkSpec {
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
+      .map(k => k -> spark.conf.getAll.get(k))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")

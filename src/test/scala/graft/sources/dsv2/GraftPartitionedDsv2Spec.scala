@@ -113,10 +113,9 @@ class GraftPartitionedDsv2Spec extends SparkSpec {
       val untouchedBefore = before.filter(e =>
         Set("b", "c")(e.partitionVals("grp"))).map(_.path).toSet
 
-      val old = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try s.sql(s"INSERT OVERWRITE $g.t VALUES (10, 'a'), (11, 'a'), (12, 'd')")
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+      withConfs("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        s.sql(s"INSERT OVERWRITE $g.t VALUES (10, 'a'), (11, 'a'), (12, 'd')")
+      }
 
       // partition 'a' replaced, 'd' added, 'b'/'c' files physically intact
       assert(s.sql(s"SELECT k FROM $g.t ORDER BY k").collect()
@@ -196,14 +195,11 @@ class GraftPartitionedDsv2Spec extends SparkSpec {
       // dynamic overwrite (Iceberg's per-spec ReplacePartitions semantics).
       cat.setPartitionSpec("t",
         Seq(GraftCatalog.PartitionFieldDef("k_bucket", "bucket[8]", "k")))
-      val old = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try s.sql(s"INSERT INTO $g.t SELECT id, concat('new', id) FROM range(1000, 1200)")
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-      // (plain INSERT above primes new-binding files; now the overwrite)
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try s.sql(s"INSERT OVERWRITE $g.t SELECT id, concat('ow', id) FROM range(2000, 2200)")
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+      withConfs("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        s.sql(s"INSERT INTO $g.t SELECT id, concat('new', id) FROM range(1000, 1200)")
+        // (plain INSERT above primes new-binding files; now the overwrite)
+        s.sql(s"INSERT OVERWRITE $g.t SELECT id, concat('ow', id) FROM range(2000, 2200)")
+      }
       val after = cat.loadEntries("t").filter(_.kind == "data")
       assert(oldFiles.subsetOf(after.map(_.path).toSet),
         "old-spec-binding files must survive a dynamic overwrite whose " +

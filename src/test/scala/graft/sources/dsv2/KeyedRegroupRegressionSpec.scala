@@ -35,7 +35,7 @@ class KeyedRegroupRegressionSpec extends SparkSpec {
       s"""CREATE TABLE $g.t (k BIGINT, v STRING)
          |PARTITIONED BY (bucket(4, k))""".stripMargin)
     spark.sql(s"INSERT INTO $g.t SELECT id, concat('v', id) FROM range(0, 10)")
-    val old = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
+    val old = spark.conf.getAll.get("spark.sql.sources.v2.bucketing.enabled")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {
       // key 999 exists in no file: writer-stamped bounds prune EVERYTHING

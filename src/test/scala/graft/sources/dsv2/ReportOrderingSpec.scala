@@ -26,16 +26,6 @@ class ReportOrderingSpec extends SparkSpec {
     g
   }
 
-  private def withConfs(pairs: (String, String)*)(f: => Unit): Unit = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def scanOrdering(
       root: String, table: String, cols: Seq[String]): Seq[String] = {
     val tbl = new GraftV2Table(root, table, asOf = None)

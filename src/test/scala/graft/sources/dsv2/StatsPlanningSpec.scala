@@ -229,9 +229,7 @@ class StatsPlanningSpec extends SparkSpec {
     // table: the NDV-driven broadcast flip survives the pending deletes
     val confs = Seq("spark.sql.cbo.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString)
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConfs(confs: _*) {
       val plan = spark.sql(
         s"""SELECT f.id, d.k FROM range(0, 100000) f
            |JOIN $g.m d ON f.id % 20000 = d.k WHERE d.seg = 7""".stripMargin)
@@ -241,9 +239,6 @@ class StatsPlanningSpec extends SparkSpec {
       }.size
       assert(bhj == 1,
         s"the exact post-delete row count must keep the dim broadcast:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
     // eq-deletes stay conservative: their suppressed-row count needs the
     // key join, so ANY pending eq-delete withholds the row count again
@@ -331,9 +326,7 @@ class StatsPlanningSpec extends SparkSpec {
       "FROM range(0, 20000)")
     val confs = Seq("spark.sql.cbo.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString)
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConfs(confs: _*) {
       def bhj(): Int = spark.sql(
         s"""SELECT f.id, d.seg FROM range(0, 200000) f
            |JOIN $g.dim d ON f.id % 20000 = d.k WHERE d.k > 1000""".stripMargin)
@@ -360,9 +353,6 @@ class StatsPlanningSpec extends SparkSpec {
       assert(cat.columnHistograms("dim").contains("k"),
         "re-analysis must keep recorded histograms maintained")
       assert(bhj() == 1)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -376,9 +366,7 @@ class StatsPlanningSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $g.fact SELECT id % 20000, id FROM range(0, 100000)")
     val confs = Seq("spark.sql.cbo.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (64 * 1024).toString)
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConfs(confs: _*) {
       def joinPlan() = spark.sql(
         s"""SELECT f.v, d.pad FROM $g.fact f JOIN $g.dim d ON f.k = d.k
            |WHERE d.seg = 7""".stripMargin).queryExecution.sparkPlan
@@ -396,9 +384,6 @@ class StatsPlanningSpec extends SparkSpec {
       val after = joinPlan()
       assert(bhjCount(after) == 1,
         s"NDV stats must flip the filtered dim to broadcast:\n$after")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -72,15 +72,17 @@ class S3FileIoSpec extends SparkSpec {
     try {
       // two data generations + a position-delete file, ALL in the store
       val local = Files.createTempDirectory("graft-s3-wire").toString
+      // returns the staged object's size in bytes
       def stage(df: org.apache.spark.sql.DataFrame, key: String): Long = {
         df.coalesce(1).write.mode("overwrite").parquet(s"$local/$key")
         val f = graft.sources.CompactionRunner.listParquet(s"$local/$key").head
-        putObject(s3.endpoint, key,
-          Files.readAllBytes(java.nio.file.Paths.get(f)))
-        df.count()
+        val bytes = Files.readAllBytes(java.nio.file.Paths.get(f))
+        putObject(s3.endpoint, key, bytes)
+        bytes.length.toLong
       }
-      stage((1L to 60L).map(k => (k, s"a$k")).toDF("id", "v"), "warehouse/data/g1.parquet")
-      stage((61L to 100L).map(k => (k, s"b$k")).toDF("id", "v"), "warehouse/data/g2.parquet")
+      val inputBytes =
+        stage((1L to 60L).map(k => (k, s"a$k")).toDF("id", "v"), "warehouse/data/g1.parquet") +
+          stage((61L to 100L).map(k => (k, s"b$k")).toDF("id", "v"), "warehouse/data/g2.parquet")
       stage(Seq(("s3://warehouse/data/g1.parquet", 0L),
         ("s3://warehouse/data/g1.parquet", 1L)).toDF("file_path", "pos"),
         "warehouse/deletes/pd1.parquet")
@@ -103,6 +105,9 @@ class S3FileIoSpec extends SparkSpec {
       val resp = CompactorProto.decodeRewriteResponse(respBytes)
       assert(resp.stat.exists(_.rewrittenFilesCount == 3),
         s"3 inputs consumed: ${resp.stat}")
+      // input bytes come from the object store's file status
+      assert(resp.stat.exists(_.rewrittenBytes == inputBytes),
+        s"rewritten bytes must sum the s3 data inputs ($inputBytes): ${resp.stat}")
       val added = resp.dataFiles.map(_.path)
       assert(added.nonEmpty && added.forall(_.startsWith("s3://warehouse/out2")),
         s"compaction output must land in the store: $added")
