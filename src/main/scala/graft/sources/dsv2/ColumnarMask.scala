@@ -5,12 +5,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.{CompactionRunner, FieldIds, GraftCatalog}
 
 import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
 
 /** VECTORIZED delete application: serve a delete-bearing SELECT as the
   * scans' own `ColumnarBatch`es, masking deleted rows inside each batch
@@ -40,10 +43,18 @@ import scala.collection.immutable.ArraySeq
   *    re-applies the filters above the scan (the doorway always reports
   *    filters residual), so masking a point lookup opens only the
   *    covering files.
+  *  - ROW-ID reads (a projection holding `_file`/`_pos` — the row-level
+  *    DML scan, copy-on-write group-filtered scans, user SELECTs of the
+  *    metadata columns) are served by the same scan, delete-free
+  *    snapshots included: `_pos` is the leaf's `row_index` vector and
+  *    `_file` a per-batch constant holding the batch's decoded file path
+  *    — the rendering the row path's `_file` gives, so position deletes
+  *    written from it key exactly like the row path's (the reference
+  *    fabricates `sys_hidden_file_path`/`sys_hidden_pos` in the same
+  *    stream its delete join consumes).
   *
   * Strictly opt-in when PROVABLE, else `None` and the row path serves:
   *  - driver-bounded delete sets (manifest record counts, ≤ [[MaxDeleteRows]]);
-  *  - no row-id request, no COW group filter;
   *  - every schema group serves the scanned columns verbatim (same name,
   *    same type) AND under the same field-id binding as the current
   *    schema — a rename chain that reuses a name (a→c then b→a) makes
@@ -177,9 +188,20 @@ object GraftColumnarMask {
   /** The predecessor of a plan built from nothing. */
   private[dsv2] val NoPieces = new Pieces(None, Map.empty, Map.empty, Nil)
 
-  /** Per-group column locations inside the raw leaf-scan batches. */
+  /** The row-id metadata columns a projection may ask for. */
+  private val RowIdCols = Set("_file", "_pos")
+
+  /** [[Located.outIdx]]'s marker for the served `_file` column, which no
+    * leaf column holds: it is the batch's decoded path as a constant.
+    */
+  private val FileSlot = -1
+
+  /** Per-group column locations inside the raw leaf-scan batches:
+    * `outIdx` gives, per `required` field in order, its leaf column
+    * (`_pos` is the leaf's `row_index`) or [[FileSlot]].
+    */
   private final case class Located(
-      dataIdx: Array[Int],
+      outIdx: Array[Int],
       eqIdx: Array[Array[Int]],
       fileIdx: Int,
       rowIdx: Int)
@@ -244,8 +266,10 @@ object GraftColumnarMask {
     * pushed), its batches masked against the decoded delete set, which is
     * broadcast once. The caller ([[GraftScanState]]) keeps the result for
     * the snapshot and serves each statement the stats-pruned survivors'
-    * file splits of these rdds. None when masking is not provable (see
-    * the object doc) and the row path must serve.
+    * file splits of these rdds. A row-id projection serves `_file`/`_pos`
+    * from the same batches, and plans on a delete-free snapshot too (empty
+    * delete sets: every batch passes zero-copy). None when masking is not
+    * provable (see the object doc) and the row path must serve.
     *
     * Built from `prev`, the pieces of the previous snapshot's plan
     * ([[NoPieces]] for a build from nothing — the same function), in three
@@ -274,7 +298,9 @@ object GraftColumnarMask {
     if (!required.fields.forall(f => maskable(f.dataType))) return None
     val pos = entries.filter(_.kind == "posdel")
     val eqEntries = entries.filter(_.kind == "eqdel")
-    if (pos.isEmpty && eqEntries.isEmpty) return None // delete-free: plain columnar path
+    val rowIds = required.fieldNames.exists(RowIdCols)
+    // delete-free reads without row ids take the plain columnar path
+    if (pos.isEmpty && eqEntries.isEmpty && !rowIds) return None
     val delCounts = (pos ++ eqEntries).map(_.recordCount)
     if (!delCounts.forall(_ >= 0L) || delCounts.sum > MaxDeleteRows) return None
 
@@ -295,7 +321,7 @@ object GraftColumnarMask {
     val eqSets: Seq[EqSet] = eqEntries.groupBy(e => eqRows(keyOf(e)).cols).toSeq
       .sortBy(_._2.map(_.path).min)
       .map { case (cols, es) =>
-        val keys = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+        val keys = mutable.HashMap.empty[Seq[Any], Long]
         es.foreach { e =>
           eqRows(keyOf(e)).keys.foreach { k =>
             if (e.seqNum > keys.getOrElse(k, Long.MinValue)) keys(k) = e.seqNum
@@ -305,10 +331,12 @@ object GraftColumnarMask {
       }
     val eqKeyNames: Seq[String] = eqSets.flatMap(_.cols).distinct
 
-    // the scan projects `required` plus any eq-key columns it lacks (the
-    // probe reads them; the serving strips them back off)
+    // the scan projects `required` minus the row ids (the leaf's metadata
+    // columns serve them) plus any eq-key columns it lacks (the probe reads
+    // them; the serving strips them back off)
+    val dataFields = required.fields.filterNot(f => RowIdCols(f.name))
     val extraFields: Seq[StructField] = {
-      val missing = eqKeyNames.filterNot(required.fieldNames.contains)
+      val missing = eqKeyNames.filterNot(dataFields.map(_.name).contains)
       val resolved = missing.map { n =>
         canonical.flatMap(_.fields.find(_.name == n)).map(f =>
           StructField(f.name, f.dataType, f.nullable))
@@ -317,7 +345,7 @@ object GraftColumnarMask {
       resolved.flatten
     }
     val scanFields: Seq[StructField] = ArraySeq.unsafeWrapArray(
-      FieldIds.stripIds(StructType(required.fields ++ extraFields)).fields)
+      FieldIds.stripIds(StructType(dataFields ++ extraFields)).fields)
     if (!scanFields.forall(f => maskable(f.dataType))) return None
     // probe types come from the SCANNED fields so the executor-side
     // dispatch matches the vectors it reads
@@ -386,20 +414,26 @@ object GraftColumnarMask {
       }
     val located: Seq[Located] = scans.map { s =>
       val names = s.names
-      val dataIdx = required.fields.map(f => names.indexOf(f.name))
-      val eqIdx = eqProbe.map(_.cols.map(names.indexOf).toArray).toArray
       // the leaf scan appends the flat metadata columns AFTER the data
       // columns; search only past the data region so a USER column named
       // file_path / row_index can never be mistaken for the metadata one
       // (masking against user values would silently resurrect deleted rows)
       val metaFrom = scanFields.length
+      val dataIdx = names.indexOf(_: String)
       val fileIdx = names.indexOf("file_path", metaFrom)
       val rowIdx = names.indexWhere(n =>
         n == "row_index" || n == "_tmp_metadata_row_index", metaFrom)
-      if (dataIdx.forall(i => i >= 0 && i < metaFrom) &&
-          eqIdx.forall(_.forall(i => i >= 0 && i < metaFrom)) &&
-          fileIdx >= 0 && rowIdx >= 0)
-        Located(dataIdx, eqIdx, fileIdx, rowIdx)
+      val outIdx = required.fields.map(_.name match {
+        case "_file" => FileSlot
+        case "_pos" => rowIdx
+        case n => dataIdx(n)
+      })
+      val eqIdx = eqProbe.map(_.cols.map(dataIdx).toArray).toArray
+      val dataRefs = required.fields.zip(outIdx).collect {
+        case (f, i) if !RowIdCols(f.name) => i
+      } ++ eqIdx.flatten
+      if (dataRefs.forall(i => i >= 0 && i < metaFrom) && fileIdx >= 0 && rowIdx >= 0)
+        Located(outIdx, eqIdx, fileIdx, rowIdx)
       else return None
     }
 
@@ -426,7 +460,7 @@ object GraftColumnarMask {
         val (posByFile, eqSets, seqOf) = bc.value
         it.map { batch =>
           val n = batch.numRows()
-          if (n == 0) strip(batch, loc.dataIdx)
+          if (n == 0) strip(batch, loc, null)
           else {
             // the raw leaf renders the ENCODED form — decode once into
             // the literal canonKey domain the maps above are keyed in
@@ -440,7 +474,7 @@ object GraftColumnarMask {
             // a file at least as new as every equality delete can never
             // match the `seq <` guard — zero-copy passthrough
             val eqApplies = eqSets.nonEmpty && fileSeq < eqMaxSeq
-            if (dels == null && !eqApplies) strip(batch, loc.dataIdx)
+            if (dels == null && !eqApplies) strip(batch, loc, file)
             else if (!eqApplies) {
               val rows = batch.column(loc.rowIdx)
               val first = rows.getLong(0)
@@ -449,17 +483,17 @@ object GraftColumnarMask {
               // batches untouched without scanning them
               var lo = java.util.Arrays.binarySearch(dels, first)
               if (lo < 0) lo = -lo - 1
-              if (lo >= dels.length || dels(lo) > last) strip(batch, loc.dataIdx)
+              if (lo >= dels.length || dels(lo) > last) strip(batch, loc, file)
               else {
                 val (keep, kept) = posKeep(batch, loc.rowIdx, dels, lo)
-                if (kept == n) strip(batch, loc.dataIdx)
-                else copyFiltered(batch, loc.dataIdx, keep, kept, requiredLocal)
+                if (kept == n) strip(batch, loc, file)
+                else copyFiltered(batch, loc, file, keep, kept, requiredLocal)
               }
             } else {
               val (keep, kept) = fullKeep(
                 batch, loc, dels, eqSets, fileSeq)
-              if (kept == n) strip(batch, loc.dataIdx)
-              else copyFiltered(batch, loc.dataIdx, keep, kept, requiredLocal)
+              if (kept == n) strip(batch, loc, file)
+              else copyFiltered(batch, loc, file, keep, kept, requiredLocal)
             }
           }
         }
@@ -500,11 +534,23 @@ object GraftColumnarMask {
     if (n == a.length) a else java.util.Arrays.copyOf(a, n)
   }
 
-  /** Positions grouped by the canonKey of the data file they delete in. */
-  private def byDataFile(rows: Iterator[(String, Long)]): Map[String, Array[Long]] =
-    rows.toSeq
-      .groupMap(r => CompactionRunner.canonKey(CompactionRunner.canonPath(r._1)))(_._2)
-      .map { case (f, ps) => f -> ps.toArray }
+  /** Positions per recorded data-file path, re-keyed by the path's
+    * canonKey: one canonicalization per distinct path (a Hadoop path parse
+    * and a decode each), never one per position.
+    */
+  private def byDataFile(byPath: Iterable[(String, Array[Long])]): Map[String, Array[Long]] =
+    byPath.groupMapReduce(p => CompactionRunner.canonKey(CompactionRunner.canonPath(p._1)))(
+      _._2)(_ ++ _)
+
+  /** Decoded `(file_path, pos)` rows grouped by their recorded path. */
+  private def positionsByPath(rows: Array[Array[Any]]): Iterable[(String, Array[Long])] = {
+    val byPath = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofLong]
+    rows.foreach { r =>
+      byPath.getOrElseUpdate(r(0).asInstanceOf[String], new mutable.ArrayBuilder.ofLong) +=
+        r(1).asInstanceOf[java.lang.Long].longValue
+    }
+    byPath.view.mapValues(_.result()).toSeq
+  }
 
   /** Each of `paths` read by [[DeleteFileDecoder]] on the bounded footer
     * pool, several files at a time; None when any refuses.
@@ -542,16 +588,14 @@ object GraftColumnarMask {
     lazy val conf = spark.sessionState.newHadoopConf()
     val fromDv = dvs.map { case (k, e) =>
       deleteFilesDecoded.incrementAndGet()
-      k -> byDataFile(graft.sources.DeletionVectors.read(e.path, conf).iterator
-        .flatMap { case (f, ps) => ps.iterator.map(f -> _) })
+      k -> byDataFile(graft.sources.DeletionVectors.read(e.path, conf))
     }
     val pqPaths = pqs.values.map(_.path).toSeq
     val rows = decodeFiles(spark, pqPaths, _ => DeleteFileDecoder.PosColumns)
       .getOrElse(return None)
     if (!rows.valuesIterator.forall(_.forall(r => r(0) != null && r(1) != null))) return None
     val fromPq = pqs.map { case (k, e) =>
-      k -> byDataFile(rows(e.path).iterator.map(r =>
-        (r(0).asInstanceOf[String], r(1).asInstanceOf[java.lang.Long].longValue)))
+      k -> byDataFile(positionsByPath(rows(e.path)))
     }
     Some(wanted.map { case (k, _) =>
       k -> known.getOrElse(k, fromDv.getOrElse(k, fromPq(k)))
@@ -718,61 +762,79 @@ object GraftColumnarMask {
     (keep, kept)
   }
 
-  /** The batch's data columns only (in `required` order) — zero-copy view
-    * over the reader's vectors (same consume-before-next contract as
-    * serving the original).
-    */
-  private def strip(batch: ColumnarBatch, dataIdx: Array[Int]): ColumnarBatch = {
-    val cols = dataIdx.map(i => batch.column(i): ColumnVector)
-    new ColumnarBatch(cols, batch.numRows())
+  /** `_file` for `rows` rows of the data file `file` (its decoded path). */
+  private def fileColumn(rows: Int, file: String): ColumnVector = {
+    val v = new ConstantColumnVector(rows, StringType)
+    if (file == null) v.setNull() else v.setUtf8String(UTF8String.fromString(file))
+    v
   }
 
-  /** Copy the batch's kept rows into fresh on-heap vectors. Only
-    * delete-bearing batches pay this.
+  /** The batch's `required` columns only, in order — zero-copy view over
+    * the reader's vectors (same consume-before-next contract as serving
+    * the original); `_file` is the constant `file`.
+    */
+  private def strip(batch: ColumnarBatch, loc: Located, file: String): ColumnarBatch = {
+    val n = batch.numRows()
+    val cols = loc.outIdx.map(i =>
+      if (i == FileSlot) fileColumn(n, file) else batch.column(i))
+    new ColumnarBatch(cols, n)
+  }
+
+  /** Copy the batch's kept rows into fresh on-heap vectors (`_file` stays
+    * a constant). Only delete-bearing batches pay this.
     */
   private def copyFiltered(
       batch: ColumnarBatch,
-      dataIdx: Array[Int],
+      loc: Located,
+      file: String,
       keep: Array[Boolean],
       kept: Int,
       schema: StructType): ColumnarBatch = {
-    import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    val n = batch.numRows()
-    val out = OnHeapColumnVector.allocateColumns(kept, schema)
-    var c = 0
-    while (c < dataIdx.length) {
-      val src = batch.column(dataIdx(c))
-      val dst = out(c)
-      // type dispatch hoisted PER COLUMN (one branch each), not per kept
-      // cell — the masked-copy hot loop stays monomorphic
-      val copyCell: (Int, Int) => Unit = schema.fields(c).dataType match {
-        case BooleanType => (i, o) => dst.putBoolean(o, src.getBoolean(i))
-        case ByteType => (i, o) => dst.putByte(o, src.getByte(i))
-        case ShortType => (i, o) => dst.putShort(o, src.getShort(i))
-        case IntegerType | DateType => (i, o) => dst.putInt(o, src.getInt(i))
-        case LongType | TimestampType | TimestampNTZType =>
-          (i, o) => dst.putLong(o, src.getLong(i))
-        case FloatType => (i, o) => dst.putFloat(o, src.getFloat(i))
-        case DoubleType => (i, o) => dst.putDouble(o, src.getDouble(i))
-        case StringType => (i, o) => {
-          val b = src.getUTF8String(i).getBytes
-          dst.putByteArray(o, b, 0, b.length)
-        }
-        case other => throw new IllegalStateException(
-          s"unmaskable type $other escaped the plan-time guard")
-      }
-      var i = 0
-      var o = 0
-      while (i < n) {
-        if (keep(i)) {
-          if (src.isNullAt(i)) dst.putNull(o)
-          else copyCell(i, o)
-          o += 1
-        }
-        i += 1
-      }
-      c += 1
+    val out = loc.outIdx.zip(schema.fields).map { case (i, f) =>
+      if (i == FileSlot) fileColumn(kept, file)
+      else copyKept(batch.column(i), f.dataType, batch.numRows(), keep, kept)
     }
-    new ColumnarBatch(out.map(v => v: ColumnVector), kept)
+    new ColumnarBatch(out, kept)
+  }
+
+  /** The `kept` rows of `src`'s first `n` marked in `keep`, in a fresh
+    * on-heap vector of type `dt`.
+    */
+  private def copyKept(
+      src: ColumnVector,
+      dt: DataType,
+      n: Int,
+      keep: Array[Boolean],
+      kept: Int): ColumnVector = {
+    val dst = new OnHeapColumnVector(kept, dt)
+    // type dispatch hoisted PER COLUMN (one branch each), not per kept
+    // cell — the masked-copy hot loop stays monomorphic
+    val copyCell: (Int, Int) => Unit = dt match {
+      case BooleanType => (i, o) => dst.putBoolean(o, src.getBoolean(i))
+      case ByteType => (i, o) => dst.putByte(o, src.getByte(i))
+      case ShortType => (i, o) => dst.putShort(o, src.getShort(i))
+      case IntegerType | DateType => (i, o) => dst.putInt(o, src.getInt(i))
+      case LongType | TimestampType | TimestampNTZType =>
+        (i, o) => dst.putLong(o, src.getLong(i))
+      case FloatType => (i, o) => dst.putFloat(o, src.getFloat(i))
+      case DoubleType => (i, o) => dst.putDouble(o, src.getDouble(i))
+      case StringType => (i, o) => {
+        val b = src.getUTF8String(i).getBytes
+        dst.putByteArray(o, b, 0, b.length)
+      }
+      case other => throw new IllegalStateException(
+        s"unmaskable type $other escaped the plan-time guard")
+    }
+    var i = 0
+    var o = 0
+    while (i < n) {
+      if (keep(i)) {
+        if (src.isNullAt(i)) dst.putNull(o)
+        else copyCell(i, o)
+        o += 1
+      }
+      i += 1
+    }
+    dst
   }
 }

@@ -26,9 +26,12 @@ import graft.sources.{CompactionRunner, FieldIds, GraftCatalog}
   *    files under an older id);
   *  - ONE planned scan over ALL data files, built with no filter pushed:
   *    the delete-masked columnar scan ([[GraftColumnarMask.plan]] — the
-  *    delete set decoded and broadcast once), else the delete-free
-  *    columnar or narrow row plan of [[GraftInnerFrame.frames]]. Each is
-  *    kept as the plan's rdds plus their planned `FilePartition`s.
+  *    delete set decoded and broadcast once), which also serves row-id
+  *    (`_file`/`_pos`) projections, delete-free snapshots included; else
+  *    the delete-free columnar or narrow row plan of
+  *    [[GraftInnerFrame.frames]], and for the row-id reads the mask
+  *    refuses, its row-id frame. Each is kept as the plan's rdds plus
+  *    their planned `FilePartition`s.
   *
   * A statement then prunes files by stats/partition/bloom against the
   * cached entries and serves only the survivors' splits as FOREIGN splits
@@ -39,7 +42,9 @@ import graft.sources.{CompactionRunner, FieldIds, GraftCatalog}
   * planning (the reference applies one snapshot's delete set to its file
   * tasks the same way, `iceberg_file_task_scan.rs:224-314`). The doorway
   * reports every pushed filter residual, so serving unfiltered rows of the
-  * surviving files is exact.
+  * surviving files is exact. A row-level DML's row-id read is such a
+  * pinned read; a copy-on-write group filter prunes the same way, as the
+  * statement's runtime keep set.
   *
   * A head state is built from the previous head state of the same table
   * and projection: the masked plan decodes only the delete files, and
@@ -53,9 +58,10 @@ import graft.sources.{CompactionRunner, FieldIds, GraftCatalog}
   *
   * A plan that cannot be sliced by file (a shuffle-bearing row path) keeps
   * its per-filter served groups inside the state instead, under the same
-  * LRU rule as the states themselves. Runtime-filtered (DPP) reads prune
-  * the sliced plan per statement like any other and never store or hit a
-  * filter-keyed entry: their file set is query-local.
+  * LRU rule as the states themselves. Runtime-filtered (DPP and
+  * copy-on-write group-filtered) reads prune the sliced plan per statement
+  * like any other and never store or hit a filter-keyed entry: their file
+  * set is query-local.
   */
 private[dsv2] final class GraftScanState private (
     val snapshotId: Long,
@@ -146,7 +152,7 @@ private[dsv2] final class GraftScanState private (
       case None =>
         def build(): Seq[GraftServedGroup] =
           GraftInnerFrame.served(spark, root, table, Some(snapshotId), required,
-            filters, None, runtimeKeep)
+            filters, runtimeKeep)
         if (runtimeKeep.isDefined) build()
         else {
           val key = filters.toSeq.map(_.toString)
@@ -198,7 +204,9 @@ private[graft] object GraftScanState {
 
   /** The doorway's unkeyed batch read: the served groups of `table` at
     * `asOf` (head when None) for one statement's `filters` and runtime
-    * keep set, from the snapshot's cached state — built on first use.
+    * keep set — a DPP filter's files or a copy-on-write group's, an empty
+    * set serving nothing — from the snapshot's cached state, built on
+    * first use.
     */
   def serve(
       spark: SparkSession,
@@ -295,8 +303,7 @@ private[graft] object GraftScanState {
         Some(plans.flatten.map { case (rdd, parts) => mk(rdd, parts) })
       else None
     val masked: Option[(Seq[GraftSlices], GraftColumnarMask.Pieces)] =
-      if (required.fieldNames.exists(n => n == "_file" || n == "_pos")) None
-      else GraftColumnarMask.plan(spark, entries, cat.schemaAt(table, sid), required, prev)
+      GraftColumnarMask.plan(spark, entries, cat.schemaAt(table, sid), required, prev)
         .flatMap { case (rdds, pieces) =>
           slices(rdds.map(r => DatasetBridge.fileScanPartitions(r).map(r -> _)),
             GraftColumnarSlices(null, _, _)).map(_ -> pieces)

@@ -782,10 +782,10 @@ class GraftV1Scan(
     // gated on the engine's OWN storage-partitioned-join switch
     // (Iceberg's posture exactly). ROW-ID scans (_file/_pos required —
     // the row-level DML shape) never serve keyed: the WriteDelta above
-    // them gains nothing from a claimed clustering, and the row-id read
-    // path plans one whole-table frame (frames' needsRowId branch), so a
-    // per-tuple regroup would re-serve that frame once per tuple —
-    // measured as N× duplicated UPDATE rows on an N-tuple table.
+    // them gains nothing from a claimed clustering, and they serve from
+    // the snapshot's scan state, whose row path (the mask's refusal) is
+    // one whole-table frame a per-tuple regroup would re-serve once per
+    // tuple — measured as N× duplicated UPDATE rows on an N-tuple table.
     if (host.isDefined ||
         required.fieldNames.exists(n => n == "_file" || n == "_pos") ||
         !SparkSession.active.conf.get(
@@ -1151,14 +1151,12 @@ class GraftV1Scan(
   }
 
   /** EVERY batch read — plain SELECTs and the row-level-operation
-    * rewrites alike — serves through `BatchScanExec` as the
-    * per-schema-group LAZY narrow rdds ([[GraftInnerFrame.servableRdds]]):
-    * each `InputPartition` is a file-task slice computed on the executor
-    * (parquet scan + codegen'd delete anti joins against broadcast delete
-    * sets), nothing pre-executes on the driver, and runtime filters
-    * ([[filter]]) prune the file set between partition probes. Only a
-    * genuinely shuffle-bearing plan (e.g. sort-merge-sized delete sets)
-    * falls back to the eager materialize-then-serve shape.
+    * scans alike — serves through `BatchScanExec` as file-task slices of
+    * one planned scan: keyed serving's regroup, else the snapshot's scan
+    * state ([[GraftScanState]]), pruned per statement. Each
+    * `InputPartition` is computed on the executor, nothing pre-executes on
+    * the driver, and runtime filters ([[filter]]) and copy-on-write group
+    * filters prune the file set between partition probes.
     */
   override def toBatch: org.apache.spark.sql.connector.read.Batch =
     keyedLayout match {
@@ -1202,15 +1200,10 @@ class GraftV1Scan(
           // window between optimizer-time claim and execution-time plan
           // must never serve newer data under the sorted claim
           val serveAsOf = asOf.orElse(orderingClaimSnapshot)
-          // a copy-on-write group filter restricts the read to a
-          // query-local file set through the row-id scan: planned per
-          // statement. Every other read serves from the snapshot's scan
-          // state — planned once per snapshot, pruned per statement.
-          if (host.nonEmpty)
-            GraftInnerFrame.served(spark, root, table, serveAsOf, required,
-              filters, host.flatMap(_.groupFilter), runtimeKeep)
-          else GraftScanState.serve(
-            spark, root, table, serveAsOf, required, filters, runtimeKeep)
+          // a copy-on-write group filter (the row-level scan takes no
+          // other runtime filter) prunes the state to the group's files
+          GraftScanState.serve(spark, root, table, serveAsOf, required, filters,
+            host.fold(runtimeKeep)(_.groupFilter))
         }, token = () => (runtimeKeep, host.flatMap(_.groupFilter)))
     }
 
@@ -1431,11 +1424,13 @@ final class GraftRddReaderFactory
   }
 }
 
-/** The one inner-plan builder both serving shapes share: the catalog MoR
-  * read, with the row-identity variant (`scanTableWithRowId`) selected
-  * automatically when the projection asks for the `_file`/`_pos`
-  * metadata columns (plain SELECTs of metadata columns and the DELTA
-  * row-level scan both land here).
+/** The ROW PATH of the doorway's reads: the catalog MoR read as frames,
+  * for what the snapshot's masked scan state ([[GraftColumnarMask.plan]])
+  * refuses — delete-free reads without row ids, keyed serving, and the
+  * reads the mask cannot prove (the probe switch, a rename chain,
+  * unmaskable types, oversized delete sets, non-parquet data). A
+  * projection asking for the `_file`/`_pos` metadata columns reads the
+  * row-identity variant (`scanTableWithRowId`), one whole-table frame.
   */
 private[dsv2] object GraftInnerFrame {
   def apply(
@@ -1444,18 +1439,16 @@ private[dsv2] object GraftInnerFrame {
       table: String,
       asOf: Option[Long],
       required: StructType,
-      filters: Array[Filter],
-      fileFilter: Option[Set[String]] = None): DataFrame =
-    frames(spark, root, table, asOf, required, filters, fileFilter)
-      .reduce(_.unionByName(_))
+      filters: Array[Filter]): DataFrame =
+    frames(spark, root, table, asOf, required, filters).reduce(_.unionByName(_))
 
-  /** The per-statement serve of a read whose file set is query-local
-    * (a copy-on-write group filter) or whose plan cannot be sliced by file
-    * (a shuffle-bearing row path): the frames planned with the statement's
-    * filters, served as the scans' own columnar batches when every group
-    * plans as a bare columnar scan — the consuming query then does the one
-    * row conversion; BatchScanExec forbids mixing row and columnar
-    * partitions, so it is all-or-nothing — else as servable row rdds.
+  /** The per-statement serve of a read whose plan cannot be sliced by
+    * file (a shuffle-bearing row path): the frames planned with the
+    * statement's filters, served as the scans' own columnar batches when
+    * every group plans as a bare columnar scan — the consuming query then
+    * does the one row conversion; BatchScanExec forbids mixing row and
+    * columnar partitions, so it is all-or-nothing — else as servable row
+    * rdds.
     */
   def served(
       spark: SparkSession,
@@ -1464,9 +1457,8 @@ private[dsv2] object GraftInnerFrame {
       asOf: Option[Long],
       required: StructType,
       filters: Array[Filter],
-      fileFilter: Option[Set[String]],
       keepPaths: Option[Set[String]]): Seq[GraftServedGroup] = {
-    val fs = frames(spark, root, table, asOf, required, filters, fileFilter,
+    val fs = frames(spark, root, table, asOf, required, filters,
       keepPaths = keepPaths)
     val columnar =
       if (fs.isEmpty) None
@@ -1493,7 +1485,6 @@ private[dsv2] object GraftInnerFrame {
       asOf: Option[Long],
       required: StructType,
       filters: Array[Filter],
-      fileFilter: Option[Set[String]] = None,
       keepPaths: Option[Set[String]] = None,
       // keyed (one-plan regroup) callers prune INSIDE the regroup instead
       // (tuple groups must survive, possibly empty): letting the frame's
@@ -1503,8 +1494,7 @@ private[dsv2] object GraftInnerFrame {
       // serving zero rows
       statsPrune: Boolean = true): Seq[DataFrame] = {
     val cat = new GraftCatalog(root)
-    val needsRowId = fileFilter.isDefined ||
-      required.fieldNames.exists(n => n == "_file" || n == "_pos")
+    val needsRowId = required.fieldNames.exists(n => n == "_file" || n == "_pos")
     /** A pushed point-lookup routes through the catalog's pruned scans
       * (partition-tuple + stats + bloom file skipping — the q124 shape,
       * now through the doorway): a `k = v` predicate on a bucketed or
@@ -1596,12 +1586,13 @@ private[dsv2] object GraftInnerFrame {
     val bases: Seq[DataFrame] =
       if (needsRowId) {
         // the row-id scan plans the WHOLE table (one frame); a keepPaths
-        // restriction must still hold — filter on the fabricated file
-        // path so a caller regrouping by file set never sees rows from
-        // outside its group (served N× otherwise)
+        // restriction (runtime filter or copy-on-write group, an empty
+        // one keeping nothing) must still hold — filter on the fabricated
+        // file path, which renders canonKey's literal domain
         val full = cat.scanTableWithRowId(spark, table, asOf)
         Seq(keepPaths.fold(full)(kp =>
-          full.filter(col("_file").isInCollection(kp))))
+          full.filter(col("_file").isInCollection(
+            kp.map(graft.sources.CompactionRunner.canonKey)))))
       }
       else prunedScan.map(Seq(_))
         .getOrElse {
@@ -1618,14 +1609,8 @@ private[dsv2] object GraftInnerFrame {
               kp => (e: cat.TableEntry) => kp.contains(e.path)))
         }
     bases.map { base =>
-      // runtime GROUP filter (copy-on-write ReplaceData): restrict to the
-      // files the dynamic-pruning subquery found matching rows in — the
-      // exact set the replacement commit will retire
-      val grouped = fileFilter.fold(base)(fs =>
-        if (fs.isEmpty) base.limit(0)
-        else base.filter(col("_file").isInCollection(fs)))
       val filtered = filters.flatMap(V1FilterColumns.toColumn)
-        .foldLeft(grouped)(_.filter(_))
+        .foldLeft(base)(_.filter(_))
       // zero-column projections (COUNT(*)) are legal: select() keeps the
       // row count with an empty schema, matching readSchema().
       // NESTED column pruning can hand us a required struct type that is a
